@@ -10,8 +10,8 @@ shifted pair, passes A-vs-A").
 
 * categorical: chi-square goodness-of-fit of each partition's histogram
   against the normalized median histogram.
-* numeric: Kolmogorov-Smirnov distance of each partition's ECDF (on a global
-  approximate-quantile grid) against the per-bucket median ECDF.
+* numeric: Kolmogorov-Smirnov distance of each partition's ECDF (on a fixed
+  log-spaced grid) against the per-bucket median ECDF.
 
 Everything is Spark SQL over tiny aggregates — histograms via groupBy, the
 median over the (n_parts × n_values) proportions table, and significance via
@@ -21,15 +21,16 @@ c(α)/sqrt(n) for one-sample KS). No scipy, no Python in the data path: at
 it stays JVM-side with partial aggregation; all statistics run on the small
 aggregate.
 
-JOB BUDGET (round-3 scaling fix): building a drift plan fires exactly THREE
-Spark jobs — the two corpus reductions (`obs`, `counts`), eagerly
-localCheckpointed because each appears several times downstream (parts
-totals, the distinct value/bucket set, the dense-grid join) and Catalyst
-demonstrably does NOT collapse those copies (join-key `isnotnull` pushdown
-and column pruning break subtree identity, so ReuseExchange never matches —
-measured: the checkpoint-free form re-ran the KS bucket chain ~10× and was
-6× slower end-to-end) — plus the KS percentile grid, whose cut points must
-become plan literals for the codegen'd bucket chain.
+JOB BUDGET (round-3 scaling fix): building a drift plan fires one Spark job
+per statistic — its corpus reduction (`obs` for chi-square, `counts` for KS
+and PSI), eagerly localCheckpointed because each appears several times
+downstream (parts totals, the distinct value/bucket set, the dense-grid
+join) and Catalyst demonstrably does NOT collapse those copies (join-key
+`isnotnull` pushdown and column pruning break subtree identity, so
+ReuseExchange never matches — measured: the checkpoint-free form re-ran the
+KS bucket chain ~10× and was 6× slower end-to-end). The KS and PSI buckets
+come from a data-independent log grid (_log_bucket), so no job computes
+cut points and none are collected into plan literals.
 
 The Bonferroni partition count, previously two more driver-blocking
 `.count()` jobs, is instead a broadcast one-row aggregate cross-joined into
@@ -38,16 +39,12 @@ evaluated as Column arithmetic (Acklam's rational approximation — plain
 +,*,log,sqrt — public algorithm), so per-test α depends on the
 runtime-computed count without collecting it.
 
-The remaining three build-time jobs are small (they aggregate the cached
-derived columns), and the runner overlaps the WHOLE drift build +
-materialization with the main violations job on a background thread
-(runner.py), so none of this blocks the driver's critical path — that
-serial floor was the largest engine-owned term in the measured N→4N scaling
-gap (VERDICT r2 "What's wrong" #1).
-
-The KS grid is computed once with percentile_approx and inlined as a plan
-constant (the analog of the reference sampling "now" once at startup,
-src/main.zig:399-403).
+The build-time jobs are small (they aggregate the cached derived columns),
+and the runner overlaps the WHOLE drift build + materialization with the
+main violations job on a background thread (runner.py), so none of this
+blocks the driver's critical path — that serial floor was the largest
+engine-owned term in the measured N→4N scaling gap (VERDICT r2 "What's
+wrong" #1).
 """
 
 from __future__ import annotations
@@ -93,9 +90,8 @@ def _ppf_tail(p: Column) -> Column:
 def _norm_ppf_col(p: Column) -> Column:
     """Inverse standard-normal CDF as a Column expression — Acklam's rational
     approximation evaluated entirely in the plan (+,*,/,log,sqrt and two
-    branches). Same coefficients as the scalar version below; enables
-    critical values that depend on runtime-computed counts (Bonferroni)
-    without a driver-side collect."""
+    branches). Enables critical values that depend on runtime-computed
+    counts (Bonferroni) without a driver-side collect."""
     qc = p - F.lit(0.5)
     r = qc * qc
     central_num = (_horner(_PPF_A[:-1], r) + F.lit(_PPF_A[-1])) * qc
@@ -106,34 +102,6 @@ def _norm_ppf_col(p: Column) -> Column:
         .when(p > F.lit(1.0 - _PPF_PLOW), -_ppf_tail(F.lit(1.0) - p))
         .otherwise(central)
     )
-
-
-def _norm_ppf(p: float) -> float:
-    """Scalar ppf (same Acklam approximation) — kept for tests and for
-    callers with a compile-time α."""
-    import math
-
-    plow, phigh = _PPF_PLOW, 1 - _PPF_PLOW
-    a, b, c, d = _PPF_A, _PPF_B, _PPF_C, _PPF_D
-    if p < plow:
-        q = math.sqrt(-2 * math.log(p))
-        return (((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
-            (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
-        )
-    if p > phigh:
-        return -_norm_ppf(1 - p)
-    q = p - 0.5
-    r = q * q
-    return (((((a[0] * r + a[1]) * r + a[2]) * r + a[3]) * r + a[4]) * r + a[5]) * q / (
-        ((((b[0] * r + b[1]) * r + b[2]) * r + b[3]) * r + b[4]) * r + 1
-    )
-
-
-def _ks_c(alpha: float) -> float:
-    """Asymptotic one-sample KS critical coefficient: c(α) = sqrt(-ln(α/2)/2)."""
-    import math
-
-    return math.sqrt(-0.5 * math.log(alpha / 2))
 
 
 def _wilson_hilferty_crit(dof: Column, z: Column) -> Column:
@@ -156,12 +124,11 @@ def chi_square_drift(
     value: Column | str,
     *,
     alpha: float = 0.01,
-    bonferroni: bool = True,
     materialize=None,
 ) -> DataFrame:
     """Per-partition chi-square goodness-of-fit vs the median histogram.
 
-    bonferroni=True divides α by the number of partitions — testing every
+    α is divided by the number of partitions (Bonferroni) — testing every
     partition at per-test α flags ~α·n_parts clean partitions by chance;
     the family-wise correction keeps the false-alarm rate at α overall.
     The partition count enters the plan as a broadcast scalar (no job is
@@ -207,11 +174,7 @@ def chi_square_drift(
         )
     )
     per_part = _with_nparts(per_part, parts)
-    alpha_eff = (
-        F.lit(alpha) / F.greatest(F.col("n_parts"), F.lit(1))
-        if bonferroni
-        else F.lit(float(alpha))
-    )
+    alpha_eff = F.lit(alpha) / F.greatest(F.col("n_parts"), F.lit(1))
     z = -_norm_ppf_col(alpha_eff)
     crit = _wilson_hilferty_crit(F.greatest(F.col("dof"), F.lit(1)), z)
     return per_part.select(
@@ -231,8 +194,7 @@ def _log_bucket(x: Column, per_octave: int = 16) -> Column:
     collect, no plan literals — the whole KS reduction becomes one scan of
     the cached numeric column. Monotone in x (including negatives), so the
     bucket ECDF is the true ECDF evaluated on the grid and max|ΔECDF| is the
-    standard grid lower bound of the KS statistic, same as the percentile
-    grid but free."""
+    standard grid lower bound of the KS statistic."""
     mag = F.floor(F.log2(F.abs(x) + F.lit(1.0)) * F.lit(float(per_octave))).cast(
         "long"
     )
@@ -244,48 +206,28 @@ def ks_drift(
     value: Column | str,
     *,
     alpha: float = 0.01,
-    grid_size: int = 128,
-    grid: str = "percentile",
-    bonferroni: bool = True,
     materialize=None,
 ) -> DataFrame:
-    """Per-partition approximate KS vs the median ECDF across partitions.
-    bonferroni: family-wise α correction across partitions (see chi_square_drift).
+    """Per-partition approximate KS vs the median ECDF across partitions,
+    with Bonferroni-corrected α (see chi_square_drift).
 
-    ECDFs are evaluated on a global percentile_approx grid (grid_size cut
-    points), so the statistic is exact on the grid — a lower bound of the
-    true KS with resolution ~1/grid_size, which is what matters for drift
-    flagging at scale. This builder fires two jobs: the grid pass (its cut
-    points must be plan literals for the codegen'd bucket chain) and the
-    bucket-count checkpoint; the Bonferroni count stays in-plan. Returns
+    ECDFs are evaluated on the fixed log-spaced grid (_log_bucket), so the
+    statistic is exact on the grid — a lower bound of the true KS at ~4.4%
+    relative resolution, which is what matters for drift flagging at
+    scale. This builder fires one job, the bucket-count checkpoint (a
+    percentile grid was measured as the single most expensive drift stage,
+    9.5s of the 13.6s drift wall at 1M docs/8 cores, and its cut points
+    had to be driver-collected into plan literals). Returns
     (part, ks, n_part, crit, drifted).
     """
     val = (F.col(value) if isinstance(value, str) else value).cast("double")
     base = docs.select("part", val.alias("x")).where(F.col("x").isNotNull())
-    if grid == "log":
-        # fixed log-spaced grid: zero build-time jobs (the percentile pass
-        # was the single most expensive drift stage — measured 9.5s of the
-        # 13.6s drift wall at 1M docs/8 cores — and its cut points had to be
-        # driver-collected into plan literals)
-        bucket = _log_bucket(F.col("x"))
-    else:
-        probs = [i / grid_size for i in range(1, grid_size)]
-        grid_row = base.agg(
-            F.percentile_approx("x", probs, 10_000).alias("g")
-        ).collect()[0]
-        cuts = sorted(set(grid_row["g"]))
-        # bucket = number of cut points <= x (0..len(cuts)), as a chain of
-        # codegen'd comparisons — the previous size(filter(array_lit, ...))
-        # form ran interpreted and materialized a |grid|-element array per
-        # row, which dominated the KS aggregation at corpus scale
-        bucket = F.lit(0)
-        for c in cuts:
-            bucket = bucket + (F.col("x") >= F.lit(float(c))).cast("int")
+    bucket = _log_bucket(F.col("x"))
     counts = base.select("part", bucket.alias("b")).groupBy("part", "b").agg(
         F.count("*").alias("c")
     )
-    # one corpus scan total after the grid pass; all ECDF math reads the
-    # tiny (n_parts × grid) aggregate (localCheckpoint: see chi_square_drift)
+    # one corpus scan total; all ECDF math reads the tiny
+    # (n_parts × grid) aggregate (localCheckpoint: see chi_square_drift)
     counts = (materialize or (lambda d: d.localCheckpoint(eager=True)))(counts)
     parts = counts.groupBy("part").agg(F.sum("c").alias("n_part"))
     buckets = counts.select("b").distinct()
@@ -304,11 +246,7 @@ def ks_drift(
         .agg(F.max("_d").alias("ks"), F.min("n_part").alias("n_part"))
     )
     per_part = _with_nparts(per_part, parts)
-    alpha_eff = (
-        F.lit(alpha) / F.greatest(F.col("n_parts"), F.lit(1))
-        if bonferroni
-        else F.lit(float(alpha))
-    )
+    alpha_eff = F.lit(alpha) / F.greatest(F.col("n_parts"), F.lit(1))
     # c(α) = sqrt(-ln(α/2)/2), columnar so α may depend on the runtime count
     crit = F.sqrt(-0.5 * F.log(alpha_eff / 2.0)) / F.sqrt(
         F.col("n_part").cast("double")
@@ -436,12 +374,9 @@ def check_drift(
                                                F.col("dof")))
         )
     if numeric is not None:
-        # suite path uses the deterministic log grid: one scan, no
-        # driver-blocking percentile job per pass (standalone ks_drift keeps
-        # the percentile default for data on unknown scales)
-        ks = ks_drift(
-            docs, numeric, alpha=alpha, grid="log", materialize=materialize
-        ).where("drifted")
+        ks = ks_drift(docs, numeric, alpha=alpha, materialize=materialize).where(
+            "drifted"
+        )
         outs.append(
             v(ks, CHECK_KS, F.format_string("ks=%s > crit=%s (n=%d)",
                                             F.col("ks").cast("string"),

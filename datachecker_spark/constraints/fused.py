@@ -85,7 +85,6 @@ def fused_doc_checks(
     max_age_days: int = S.DEFAULT_MAX_AGE_DAYS,
     confidential: bool = True,
     patterns: list[str] | None = None,
-    confidential_engine: str = "auto",
 ) -> DataFrame | None:
     """One scan for every per-document check. Expressions match the
     standalone checks exactly (see module docstring). Returns None when
@@ -144,7 +143,7 @@ def fused_doc_checks(
         )
     if confidential:
         pats = conf.DEFAULT_PATTERNS if patterns is None else patterns
-        engine = conf.resolve_engine(pats, confidential_engine)
+        engine = conf.resolve_engine(pats, "auto")
         flat = (
             F.col("_flat") if "_flat" in docs.columns
             else flattened_text("spans")

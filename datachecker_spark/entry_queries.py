@@ -363,18 +363,15 @@ def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixed-width long join keys + tokenize-once checkpoint of the hashed
     exploded table); values identical to the string-key oracle unless two
     shingles of the same doc collide in 64 bits (~S²/2⁶⁵ — the identity is
-    also pytest-asserted on a mixed corpus). candidates="prefix" (All-Pairs
-    prefix filtering, round-5) replaces the full common-shingle self-join
-    with a prefix-token join — measured 23.7s → 12.9s (1.8×) at this
-    query's t=0.2/max_df=1000 on sf0.1/local[32], clean sequential runs
-    (tools/bench_ngram_modes.py), byte-identical output, so the
-    count-join-shaped oracle still gates it."""
+    also pytest-asserted on a mixed corpus). Candidates come from All-Pairs
+    prefix filtering (round-5; measured 23.7s → 12.9s against the full
+    common-shingle self-join at this query's t=0.2/max_df=1000 on
+    sf0.1/local[32]); the output is exact, so the count-join-shaped oracle
+    gates it."""
     from datachecker_spark.textops import ngram_jaccard_pairs
 
     docs = _read(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(
-        docs, threshold=0.2, max_df=1000, hash_shingles=True, candidates="prefix"
-    )
+    return ngram_jaccard_pairs(docs, threshold=0.2, max_df=1000, hash_shingles=True)
 
 
 @query(
@@ -415,13 +412,13 @@ def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ngram_prefix_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PREFIX-FILTERED exact-Jaccard path (All-Pairs/ppjoin candidate
-    generation, textops._jaccard_prefix_filtered) at a dedup-grade
-    threshold (0.5) — the regime the prefix filter exists for, where the
-    (df asc)-ordered prefixes exclude the high-df shingles that dominate
-    the count-join's Σ df² cost. The oracle is the SAME exact-Jaccard SQL
-    as ngram_jaccard_pairs at t=0.5: prefix filtering is a candidate-
-    pruning strategy, not a semantics change, so a hash-green row here
-    verifies the whole alternative plan (global (df, s) ordering, prefix
+    generation, textops.ngram_jaccard_pairs) at a dedup-grade threshold
+    (0.5) — the regime the prefix filter exists for, where the (df
+    asc)-ordered prefixes exclude the high-df shingles that dominate a
+    common-shingle self-join's Σ df² cost. The oracle is the SAME
+    exact-Jaccard SQL as ngram_jaccard_pairs at t=0.5: prefix filtering is
+    a candidate-pruning strategy, not a semantics change, so a hash-green
+    row here verifies the whole plan (global (df, s) ordering, prefix
     slice, length filter, array_intersect verify) end-to-end against an
     implementation-independent oracle. Runs on the deterministic doc_id%3==1
     third of the corpus (a different third than minhash_containment): the
@@ -431,13 +428,11 @@ def ngram_prefix_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as strong as the full-corpus form while not tripling the
     ngram family's share of the suite bench; full-corpus throughput of
     this plan family is already measured by the t=0.2 ngram_jaccard_pairs
-    entry and tools/bench_ngram_modes.py."""
+    entry."""
     from datachecker_spark.textops import ngram_jaccard_pairs
 
     docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") % 3 == 1)
-    return ngram_jaccard_pairs(
-        docs, threshold=0.5, max_df=1000, hash_shingles=True, candidates="prefix"
-    )
+    return ngram_jaccard_pairs(docs, threshold=0.5, max_df=1000, hash_shingles=True)
 
 
 @query("minhash_lsh_dedup")  # rows-only: xxhash64 has no DuckDB equivalent
@@ -742,7 +737,13 @@ def minhash_containment_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     additional coverage — pytest exercises full small corpora. Both
     pipelines consume ONE shared tokenization pass via the shingle_sets
     seam (the round-5 composition contract: tokenize once per corpus, not
-    once per operator; output identical either way, pytest-asserted)."""
+    once per operator; output identical either way, pytest-asserted). The
+    shared sets are materialized EAGERLY: the one job below reads them about
+    five times (signatures, both verify sides, the exact operator's
+    explode), and reads of a lazy checkpoint inside one job can each re-run
+    its upstream (see graph._is_star_forest). At sf0.1/local[4] wall time
+    measured the same either way (best-of-2 over four runs each: 14.0-17.0s
+    eager, 13.8-16.3s lazy)."""
     from datachecker_spark.textops import (
         minhash_near_dup_pairs,
         ngram_jaccard_pairs,
@@ -750,11 +751,9 @@ def minhash_containment_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _read(spark, sf_dir, "documents").where(F.col("doc_id") % 3 == 0)
-    shared = shingle_sets(docs).localCheckpoint(eager=False)
+    shared = shingle_sets(docs).localCheckpoint(eager=True)
     lsh = minhash_near_dup_pairs(docs, threshold=0.2, sets=shared)
-    exact = ngram_jaccard_pairs(
-        docs, threshold=0.2, hash_shingles=True, candidates="prefix", sets=shared
-    )
+    exact = ngram_jaccard_pairs(docs, threshold=0.2, hash_shingles=True, sets=shared)
     missing = (
         lsh.select("id_a", "id_b")
         .join(exact.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
@@ -899,18 +898,12 @@ def dedup_e2e_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ngram_jaccard_pairs oracle, same threshold and max_df) feeding the
     proven recursive min-label CTE (the dedup_clusters oracle), then the
     keep filter (singletons kept via left join, clustered docs kept iff
-    node == cluster_id). The similarity stage runs candidates="prefix"
-    (round-5: 1.8× faster standalone at this threshold, identical pairs;
-    the composition itself measures flat at sf0.1 — cluster rounds + keep
-    dominate — and keeps prefix for the at-scale df²-tail argument,
-    BASELINE.md round-5 section)."""
+    node == cluster_id)."""
     from datachecker_spark.graph import dedup_clusters, keep_canonical
     from datachecker_spark.textops import ngram_jaccard_pairs
 
     docs = _read(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, threshold=0.2, max_df=1000, hash_shingles=True, candidates="prefix"
-    )
+    pairs = ngram_jaccard_pairs(docs, threshold=0.2, max_df=1000, hash_shingles=True)
     clusters = dedup_clusters(pairs.select("id_a", "id_b"))
     return keep_canonical(docs.select("doc_id", "n_chars"), clusters)
 

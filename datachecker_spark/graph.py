@@ -141,7 +141,7 @@ def connected_components(
     # max_iterations + 1 iterations allow up to max_iterations star ROUNDS:
     # convergence produced by round k is detected by the check at the top
     # of iteration k+1, so the final round needs one extra checking pass.
-    for _ in range(max_iterations + 1):
+    for rounds in range(max_iterations + 1):
         # Exact fixpoint test first — also the action that materializes the
         # current round's lazy checkpoint; only after it completes is the
         # PREVIOUS round's block set safe to release (e's checkpoint reads
@@ -156,6 +156,12 @@ def connected_components(
             prev = None
         if done:
             break
+        if rounds == max_iterations:
+            # budget spent: build no unchecked round, and strand no block
+            cache.release(e)
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iterations} rounds"
+            )
         prev = e
 
         # large-star over the symmetric view
@@ -182,10 +188,6 @@ def connected_components(
         )
 
         e = mat(small)
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds"
-        )
 
     # no post-loop assertion needed: the loop exits only on the EXACT
     # star-forest test, so a split-cluster false fixpoint is impossible by

@@ -21,6 +21,7 @@ Iceberg table becomes partition pruning (completed partitions are never read).
 from __future__ import annotations
 
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -108,14 +109,6 @@ class SuiteConfig:
     #              branch recomputation after churn.
     checkpoint_mode: str = "local"
     checkpoint_dir: str | None = None
-    # walk once, apply every row-level check (reference stat-cache design,
-    # core.zig:225-241, applied to the checks themselves): the eleven pure
-    # row-predicate checks run as THREE fused scans (doc/ref/span
-    # granularity, constraints/fused.py) instead of eleven union branches
-    # that each re-decompress the cached corpus. False = one branch per
-    # check (the standalone functions; same rows either way — asserted by
-    # tests/test_fused.py).
-    fused_rows: bool = True
 
     # checks whose verdicts depend on the WHOLE corpus, not one partition:
     # a duplicate group or repeated doc_id can span partitions, and drift
@@ -237,22 +230,17 @@ def _cache_can_drop_spans(
     """True when no enabled branch reads the raw `spans` payload, so the
     suite cache can exclude it entirely. With the derived columns present
     every family reads narrow cached columns (`span_meta` covers the
-    span-level checks); the two exceptions that still need the raw array:
-
-    * fused_rows=False with the standalone kind/json checks — those
-      posexplode `spans` directly;
-    * an integrity expectation table using algorithms beyond
-      xxhash64/sha256 — those recompute the canonical string from spans
-      (constraints/integrity._computed_column). The distinct-algo probe is
-      a tiny aggregate on the expectation table (verify_integrity runs the
-      same one).
+    span-level checks); the one exception that still needs the raw array is
+    an integrity expectation table using algorithms beyond xxhash64/sha256
+    — those recompute the canonical string from spans
+    (constraints/integrity._computed_column). The distinct-algo probe is a
+    tiny aggregate on the expectation table (verify_integrity runs the same
+    one).
 
     Dropping `spans` halves the cached text bytes (`_flat` stays the single
     text copy) — cache_fill writes less, the union job decompresses less,
     and the whole suite's bytes-per-doc demand on the memory bus falls
     (the binding constraint in BASELINE.md's scaling accounting)."""
-    if not cfg.fused_rows and (cfg.kind_consistency or cfg.json_spans):
-        return False
     if cfg.integrity and expected_fingerprints is not None:
         algos = {
             r["algo"]
@@ -299,26 +287,40 @@ def run_suite(
     if "spans" in docs.columns and _cache_can_drop_spans(cfg, expected_fingerprints):
         docs = docs.drop("spans")
     docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    docs.count()
-    t["cache_fill"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
+    # drift + profile + integrity run on this pool (see below). A failure
+    # anywhere in the pass must not strand the corpus cache or a background
+    # job's blocks in a long-lived session: the except branch waits for
+    # every submitted job, releases what each materialized, and re-raises.
+    pool = ThreadPoolExecutor(max_workers=3)
+    futs: list[Future] = []
+    # drift's internal obs/counts checkpoints are consumed entirely within
+    # this call — track them so they're released (cache.py: GC never
+    # reclaims checkpoint blocks from Python) as soon as the final drift
+    # block exists. Only the drift future's thread appends; no lock needed.
+    drift_intermediates: list[DataFrame] = []
+    violations = None
+    try:
+        docs.count()
+        t["cache_fill"] = round(time.perf_counter() - t0, 2)
+        t0 = time.perf_counter()
 
-    parts: list[DataFrame] = []
-    if cfg.duplicates:
-        parts.append(duplicates.check_duplicates(docs, n_salts=cfg.n_salts))
-    if cfg.unique_ids:
-        parts.append(uniqueness.check_unique_ids(docs, n_salts=cfg.n_salts))
-    has_ts = any(c in docs.columns for c in ("ingest_ts", "modified_ts"))
-    # sample 'now' once per run (reference: once at process startup,
-    # src/main.zig:399-403) unless the config pins a literal — a
-    # current_timestamp() column would re-evaluate per task/batch
-    now = cfg.timestamp_now
-    if cfg.timestamps and has_ts and now is None:
-        from datachecker_spark.session import sample_now_literal
+        parts: list[DataFrame] = []
+        if cfg.duplicates:
+            parts.append(duplicates.check_duplicates(docs, n_salts=cfg.n_salts))
+        if cfg.unique_ids:
+            parts.append(uniqueness.check_unique_ids(docs, n_salts=cfg.n_salts))
+        has_ts = any(c in docs.columns for c in ("ingest_ts", "modified_ts"))
+        # sample 'now' once per run (reference: once at process startup,
+        # src/main.zig:399-403) unless the config pins a literal — a
+        # current_timestamp() column would re-evaluate per task/batch
+        now = cfg.timestamp_now
+        if cfg.timestamps and has_ts and now is None:
+            from datachecker_spark.session import sample_now_literal
 
-        now = sample_now_literal()
-    if cfg.fused_rows:
-        # eleven row-level checks as THREE scans (constraints/fused.py)
+            now = sample_now_literal()
+        # eleven row-level checks as THREE scans (constraints/fused.py) —
+        # the reference's stat-cache design (core.zig:225-241) applied to
+        # the checks themselves: one walk per granularity, not per check
         parts.extend(
             df
             for df in (
@@ -351,218 +353,192 @@ def run_suite(
             )
             if df is not None
         )
-    else:
-        if cfg.empty_docs:
-            parts.append(stats.check_empty_docs(docs))
-        if cfg.large_docs:
-            parts.append(stats.check_large_docs(docs, threshold=cfg.large_doc_size))
-        if cfg.name_rules:
-            parts.append(predicates.check_doc_names(docs))
-        if cfg.name_length:
-            parts.append(predicates.check_name_length(docs, max_len=cfg.max_name_len))
-        if cfg.ref_path_length:
+        if cfg.referential and media_catalog is not None:
+            parts.append(referential.check_media_refs(docs, media_catalog))
+        write_back = None
+        if cfg.integrity_missing and expected_fingerprints is not None:
+            parts.append(integrity.check_missing_expectations(docs, expected_fingerprints))
+        if cfg.partition_sizes:
             parts.append(
-                predicates.check_ref_path_length(docs, max_len=cfg.max_path_len)
-            )
-        if cfg.temp_refs:
-            parts.append(predicates.check_temp_refs(docs))
-        if cfg.legacy_refs:
-            parts.append(predicates.check_legacy_refs(docs))
-        if cfg.kind_consistency:
-            parts.append(predicates.check_kind_consistency(docs))
-        if cfg.json_spans:
-            parts.append(predicates.check_json_spans(docs))
-        if cfg.confidential:
-            parts.append(
-                confidential.check_confidential(
-                    docs, patterns=cfg.confidential_patterns
+                diraggs.check_partition_sizes(
+                    docs, expected_parts=expected_parts, max_items=cfg.max_items_per_partition
                 )
             )
-        if cfg.timestamps and has_ts:
-            parts.append(
-                stats.check_timestamps(docs, now=now, max_age_days=cfg.max_age_days)
-            )
-    if cfg.referential and media_catalog is not None:
-        parts.append(referential.check_media_refs(docs, media_catalog))
-    write_back = None
-    if cfg.integrity_missing and expected_fingerprints is not None:
-        parts.append(integrity.check_missing_expectations(docs, expected_fingerprints))
-    if cfg.partition_sizes:
-        parts.append(
-            diraggs.check_partition_sizes(
-                docs, expected_parts=expected_parts, max_items=cfg.max_items_per_partition
-            )
-        )
 
-    # drift + profile run CONCURRENTLY with the main violations job on
-    # background threads (Spark job submission is thread-safe; this is what
-    # a cluster's scheduler does naturally when independent jobs are
-    # queued). Rationale, measured at 2M docs: drift's builders fire three
-    # small driver-blocking jobs (two aggregate checkpoints + the KS
-    # percentile grid) and the profile is another; run inline they serialize
-    # into a core-count-independent ~O(10s) floor per pass — the largest
-    # engine-owned term in the round-2 N→4N scaling gap. Overlapped, their
-    # tasks fill scheduler gaps in the big union job and the driver's
-    # critical path never blocks on them.
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=3)
-    drift_fut = None
-    # drift's internal obs/counts checkpoints are consumed entirely within
-    # this call — track them so they're released (cache.py: GC never
-    # reclaims checkpoint blocks from Python) as soon as the final drift
-    # block exists. Only the drift future's thread appends; no lock needed.
-    drift_intermediates: list[DataFrame] = []
-    if cfg.drift:
-        # both drift inputs are materialized derived columns — the drift
-        # aggregations read two cached int columns, never the span payloads
-        def _mat_track(d: DataFrame) -> DataFrame:
-            d = mat(d)
-            drift_intermediates.append(d)
-            return d
-
-        def _drift_job():
-            s0 = time.perf_counter()
-            has_media = (F.col("n_media") > 0).cast("int")
-            d = drift.check_drift(
-                docs, categorical=has_media, numeric=F.col("size"),
-                alpha=cfg.drift_alpha, psi=cfg.drift_psi,
-                psi_threshold=cfg.psi_threshold,
-                psi_per_octave=cfg.psi_per_octave, materialize=_mat_track,
-            )
-            d = mat(d)
-            t["drift_total"] = round(time.perf_counter() - s0, 2)
-            return d
-
-        drift_fut = pool.submit(_drift_job)
-
-    # profile's per-part doc counts feed the metrics grid so the metrics
-    # pass never re-scans the corpus
-    def _profile_job():
-        s0 = time.perf_counter()
-        p = mat(stats.partition_profile(docs))
-        t["profile_total"] = round(time.perf_counter() - s0, 2)
-        return p
-
-    profile_fut = pool.submit(_profile_job)
-
-    # integrity runs like drift: a background job whose expectation join +
-    # hash compute is materialized ONCE (verify_integrity's materialize
-    # seam), with the violation rows AND write_back derived from the same
-    # block. Previously the violations union computed the join once and
-    # mat(write_back) re-ran it SERIALLY after the union — a
-    # level-independent ~4-7s tail at 4M docs that capped N→4N efficiency
-    # (Amdahl), and 2× the join work. The join block is released inside the
-    # job once both outputs are materialized.
-    integrity_fut = None
-    if cfg.integrity and expected_fingerprints is not None:
-
-        def _integrity_job():
-            s0 = time.perf_counter()
-            blocks: list[DataFrame] = []
-
-            def _mt(d: DataFrame) -> DataFrame:
+        # drift + profile run CONCURRENTLY with the main violations job on
+        # background threads (Spark job submission is thread-safe; this is what
+        # a cluster's scheduler does naturally when independent jobs are
+        # queued). Rationale, measured at 2M docs: drift's builders fire
+        # small driver-blocking jobs (their aggregate checkpoints) and the
+        # profile is another; run inline they serialize
+        # into a core-count-independent ~O(10s) floor per pass — the largest
+        # engine-owned term in the round-2 N→4N scaling gap. Overlapped, their
+        # tasks fill scheduler gaps in the big union job and the driver's
+        # critical path never blocks on them.
+        drift_fut = None
+        if cfg.drift:
+            # both drift inputs are materialized derived columns — the drift
+            # aggregations read two cached int columns, never the span payloads
+            def _mat_track(d: DataFrame) -> DataFrame:
                 d = mat(d)
-                blocks.append(d)
+                drift_intermediates.append(d)
                 return d
 
-            v, wb = integrity.verify_integrity(
-                docs, expected_fingerprints, include_missing=False,
-                materialize=_mt,
-            )
-            v, wb = mat(v), mat(wb)
-            cache.release(*blocks)
-            t["integrity_total"] = round(time.perf_counter() - s0, 2)
-            return v, wb
+            def _drift_job():
+                s0 = time.perf_counter()
+                has_media = (F.col("n_media") > 0).cast("int")
+                d = drift.check_drift(
+                    docs, categorical=has_media, numeric=F.col("size"),
+                    alpha=cfg.drift_alpha, psi=cfg.drift_psi,
+                    psi_threshold=cfg.psi_threshold,
+                    psi_per_octave=cfg.psi_per_octave, materialize=_mat_track,
+                )
+                d = mat(d)
+                t["drift_total"] = round(time.perf_counter() - s0, 2)
+                return d
 
-        integrity_fut = pool.submit(_integrity_job)
+            drift_fut = pool.submit(_drift_job)
+            futs.append(drift_fut)
 
-    t["branch_build"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    # drift-only configs leave the branch list empty — the violations union
-    # then consists solely of the drift future's block
-    violations = None
-    if parts:
-        violations = parts[0]
-        for p in parts[1:]:
-            violations = violations.unionByName(p)
-    # the union of ~18 branches carries one output partition per branch
-    # partition (branches × shuffle.partitions ≈ thousands of tiny tasks);
-    # in local mode the driver's single-threaded scheduler at ~ms/task then
-    # dominates wall time and caps scaling (measured: the union job flat at
-    # ~20s from 8→32 cores while the content pass scaled 2.3×). Coalesce to
-    # a small multiple of the executor count: still ≥2 waves of parallelism,
-    # 64× fewer task launches. (narrow — no extra shuffle)
-    # 4× (not 2×): the coalesced tasks are UNEVEN — each fuses different
-    # branch mixes — and stage-level instrumentation at 8 cores showed the
-    # checkpoint stage's 16-task/2-wave shape leaving a straggler tail
-    # (utilization 0.79); 4 waves of half-size tasks smooth it while task
-    # launches stay ~100× below the un-coalesced flood
-    n_out = max(4 * docs.sparkSession.sparkContext.defaultParallelism, 16)
-    if violations is not None:
-        violations = violations.coalesce(n_out)
-    # violations feed both the sink and the metrics aggregation. Materialize
-    # the (small) result ONCE, eagerly, through the configured seam
-    # (localCheckpoint by default: truncates the 18-branch union lineage so
-    # the sink write and the metrics aggregation both read materialized
-    # rows). (A lazy .persist() is unreliable here — when the first action
-    # is a DataFrame *write*, the cache is not populated and the metrics
-    # pass re-evaluated every branch, doubling suite wall time with high
-    # variance; the "persist" mode counts eagerly for the same reason.)
-    if violations is not None:
-        violations = mat(violations)
-    t["union_mat"] = round(time.perf_counter() - t0, 2)
-    if drift_fut is not None:
-        # both sides are materialized blocks; the union itself is lazy and
-        # cheap to re-read from the sink write AND the metrics aggregation
-        d = drift_fut.result()
-        violations = d if violations is None else violations.unionByName(d)
-        # the final drift block is materialized — its obs/counts inputs
-        # are now pure insurance against a recomputation that can't happen
-        cache.release(*drift_intermediates)
-    if integrity_fut is not None:
-        iv, write_back = integrity_fut.result()
-        violations = iv if violations is None else violations.unionByName(iv)
-    if violations is None:  # every family disabled: empty, stable schema
-        from datachecker_spark.contract import empty_violations
+        # profile's per-part doc counts feed the metrics grid so the metrics
+        # pass never re-scans the corpus
+        def _profile_job():
+            s0 = time.perf_counter()
+            p = mat(stats.partition_profile(docs))
+            t["profile_total"] = round(time.perf_counter() - s0, 2)
+            return p
 
-        violations = mat(empty_violations(docs.sparkSession))
-    t["violations_job"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
+        profile_fut = pool.submit(_profile_job)
+        futs.append(profile_fut)
 
-    # metrics/profile are per-partition-sized; materialize them eagerly too so
-    # the annotated cache can be released before returning (no cache leak
-    # across repeated run_suite calls in a long-lived session). Cluster
-    # deploys that expect executor churn set checkpoint_mode="reliable"
-    # (+ checkpoint_dir) or "persist" — see SuiteConfig.
-    checks = cfg.enabled_checks()
-    if cfg.timestamps and not has_ts:
-        # ts columns absent from this input — drop the never-evaluated
-        # checks from the metrics grid instead of reporting a vacuous pass
-        checks = [
-            c for c in checks if c not in (stats.CHECK_FUTURE, stats.CHECK_STALE)
-        ]
-    profile = profile_fut.result()
-    pool.shutdown()
-    metrics = metrics_from_violations(
-        violations,
-        docs,
-        checks,
-        part_counts=profile.select("part", F.col("n_docs").alias("docs_scanned")),
-    )
-    s0 = time.perf_counter()
-    metrics = mat(metrics)
-    t["metrics_mat"] = round(time.perf_counter() - s0, 2)
-    # blocking: a lazy unpersist leaves the old cache resident while the
-    # next run_suite call populates a fresh one — at high corpus sizes the
-    # overlap pushed the heap to its limit and collapsed into full-GC
-    # thrashing (measured: 32-core worker at 4M docs stuck at <40% of one
-    # core with RSS pinned at the heap cap)
-    s0 = time.perf_counter()
-    docs.unpersist(blocking=True)
-    t["unpersist"] = round(time.perf_counter() - s0, 2)
-    t["metrics_profile"] = round(time.perf_counter() - t0, 2)
-    return SuiteResult(violations, metrics, profile, write_back)
+        # integrity runs like drift: a background job whose expectation join +
+        # hash compute is materialized ONCE (verify_integrity's materialize
+        # seam), with the violation rows AND write_back derived from the same
+        # block. Previously the violations union computed the join once and
+        # mat(write_back) re-ran it SERIALLY after the union — a
+        # level-independent ~4-7s tail at 4M docs that capped N→4N efficiency
+        # (Amdahl), and 2× the join work. The join block is released inside the
+        # job once both outputs are materialized.
+        integrity_fut = None
+        if cfg.integrity and expected_fingerprints is not None:
+
+            def _integrity_job():
+                s0 = time.perf_counter()
+                blocks: list[DataFrame] = []
+
+                def _mt(d: DataFrame) -> DataFrame:
+                    d = mat(d)
+                    blocks.append(d)
+                    return d
+
+                try:
+                    v, wb = integrity.verify_integrity(
+                        docs, expected_fingerprints, include_missing=False,
+                        materialize=_mt,
+                    )
+                    v, wb = mat(v), mat(wb)
+                finally:
+                    cache.release(*blocks)
+                t["integrity_total"] = round(time.perf_counter() - s0, 2)
+                return v, wb
+
+            integrity_fut = pool.submit(_integrity_job)
+            futs.append(integrity_fut)
+
+        t["branch_build"] = round(time.perf_counter() - t0, 2)
+        t0 = time.perf_counter()
+        # drift-only configs leave the branch list empty — the violations union
+        # then consists solely of the drift future's block
+        if parts:
+            violations = parts[0]
+            for p in parts[1:]:
+                violations = violations.unionByName(p)
+        # the union of ~18 branches carries one output partition per branch
+        # partition (branches × shuffle.partitions ≈ thousands of tiny tasks);
+        # in local mode the driver's single-threaded scheduler at ~ms/task then
+        # dominates wall time and caps scaling (measured: the union job flat at
+        # ~20s from 8→32 cores while the content pass scaled 2.3×). Coalesce to
+        # a small multiple of the executor count: still ≥2 waves of parallelism,
+        # 64× fewer task launches. (narrow — no extra shuffle)
+        # 4× (not 2×): the coalesced tasks are UNEVEN — each fuses different
+        # branch mixes — and stage-level instrumentation at 8 cores showed the
+        # checkpoint stage's 16-task/2-wave shape leaving a straggler tail
+        # (utilization 0.79); 4 waves of half-size tasks smooth it while task
+        # launches stay ~100× below the un-coalesced flood
+        n_out = max(4 * docs.sparkSession.sparkContext.defaultParallelism, 16)
+        if violations is not None:
+            violations = violations.coalesce(n_out)
+        # violations feed both the sink and the metrics aggregation. Materialize
+        # the (small) result ONCE, eagerly, through the configured seam
+        # (localCheckpoint by default: truncates the 18-branch union lineage so
+        # the sink write and the metrics aggregation both read materialized
+        # rows). (A lazy .persist() is unreliable here — when the first action
+        # is a DataFrame *write*, the cache is not populated and the metrics
+        # pass re-evaluated every branch, doubling suite wall time with high
+        # variance; the "persist" mode counts eagerly for the same reason.)
+        if violations is not None:
+            violations = mat(violations)
+        t["union_mat"] = round(time.perf_counter() - t0, 2)
+        if drift_fut is not None:
+            # both sides are materialized blocks; the union itself is lazy and
+            # cheap to re-read from the sink write AND the metrics aggregation
+            d = drift_fut.result()
+            violations = d if violations is None else violations.unionByName(d)
+            # the final drift block is materialized — its obs/counts inputs
+            # are now pure insurance against a recomputation that can't happen
+            cache.release(*drift_intermediates)
+        if integrity_fut is not None:
+            iv, write_back = integrity_fut.result()
+            violations = iv if violations is None else violations.unionByName(iv)
+        if violations is None:  # every family disabled: empty, stable schema
+            from datachecker_spark.contract import empty_violations
+
+            violations = mat(empty_violations(docs.sparkSession))
+        t["violations_job"] = round(time.perf_counter() - t0, 2)
+        t0 = time.perf_counter()
+
+        # metrics/profile are per-partition-sized; materialize them eagerly too so
+        # the annotated cache can be released before returning (no cache leak
+        # across repeated run_suite calls in a long-lived session). Cluster
+        # deploys that expect executor churn set checkpoint_mode="reliable"
+        # (+ checkpoint_dir) or "persist" — see SuiteConfig.
+        checks = cfg.enabled_checks()
+        if cfg.timestamps and not has_ts:
+            # ts columns absent from this input — drop the never-evaluated
+            # checks from the metrics grid instead of reporting a vacuous pass
+            checks = [
+                c for c in checks if c not in (stats.CHECK_FUTURE, stats.CHECK_STALE)
+            ]
+        profile = profile_fut.result()
+        pool.shutdown()
+        metrics = metrics_from_violations(
+            violations,
+            docs,
+            checks,
+            part_counts=profile.select("part", F.col("n_docs").alias("docs_scanned")),
+        )
+        s0 = time.perf_counter()
+        metrics = mat(metrics)
+        t["metrics_mat"] = round(time.perf_counter() - s0, 2)
+        # blocking: a lazy unpersist leaves the old cache resident while the
+        # next run_suite call populates a fresh one — at high corpus sizes the
+        # overlap pushed the heap to its limit and collapsed into full-GC
+        # thrashing (measured: 32-core worker at 4M docs stuck at <40% of one
+        # core with RSS pinned at the heap cap)
+        s0 = time.perf_counter()
+        docs.unpersist(blocking=True)
+        t["unpersist"] = round(time.perf_counter() - s0, 2)
+        t["metrics_profile"] = round(time.perf_counter() - t0, 2)
+        return SuiteResult(violations, metrics, profile, write_back)
+    except BaseException:
+        pool.shutdown(wait=True)
+        for f in futs:
+            if f.exception() is None:
+                r = f.result()
+                cache.release(*(r if isinstance(r, tuple) else (r,)))
+        cache.release(violations, *drift_intermediates)
+        docs.unpersist(blocking=True)
+        raise
 
 
 # --------------------------------------------------------------------------

@@ -9,8 +9,9 @@ Scale notes (10^12 docs):
 * Candidate generation for near-dup detection is always a bucket join
   (LSH band / simhash chunk / shared shingle), never an all-pairs product.
 * Pair verification shuffles only (id_a, id_b) plus small per-doc summaries.
-* The common-shingle exact-Jaccard path computes |A ∩ B| in the join and
-  |A ∪ B| from per-doc distinct counts — no second pass over text.
+* The exact-Jaccard path self-joins only each doc's (df asc)-ordered
+  shingle prefix and verifies |A ∩ B| on per-doc sorted shingle arrays —
+  no second pass over text.
 """
 
 from __future__ import annotations
@@ -56,19 +57,6 @@ def char_grams(text: Column | str, k: int = 8) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """num_hashes-wide minhash signature as a Column expression: per hash
-    function h, the minimum of xxhash64(shingle, h) over the distinct
-    shingle set. Semantic reference ONLY — higher-order functions are not
-    whole-stage-codegen'd in Spark, so the hot path (minhash_table) computes
-    the identical signature relationally via explode + min aggregates."""
-    distinct = F.array_distinct(shingles)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda h: F.array_min(F.transform(distinct, lambda s: F.xxhash64(s, h))),
-    )
-
-
 def shingle_sets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -81,8 +69,9 @@ def shingle_sets(
     both consumers require).
 
     Tokenization is the interpreted-HOF pass that dominates these operators
-    (measured: 4 re-derivations cost +50s at sf0.1 — see ngram_jaccard_pairs
-    docstring), so a composition that runs BOTH pipelines over the same
+    (measured at sf0.1/local[32], 2026-08-18: re-deriving it per consumer
+    inside ngram_jaccard_pairs instead of checkpointing it took 78.8s vs
+    39.9s), so a composition that runs BOTH pipelines over the same
     corpus should compute this once, materialize it, and hand it to each
     consumer via their `sets=` parameter: one corpus scan + one tokenize
     pass total instead of one per operator. Contract: the CALLER owns the
@@ -94,26 +83,6 @@ def shingle_sets(
         F.col(id_col).alias("id"),
         F.array_distinct(word_shingles(tokens(text_col), shingle_k)).alias("sh"),
     ).where(F.size("sh") > 0)
-
-
-def minhash_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    shingle_k: int = 2,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """(id, mh0..mh{H-1}): signatures via explode + H codegen'd min-aggs —
-    the vectorized form of minhash_signature (same values, same seeds)."""
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(word_shingles(tokens(text_col), shingle_k))).alias("s"),
-    )
-    aggs = [
-        F.min(F.xxhash64(F.col("s"), F.lit(h))).alias(f"mh{h}") for h in range(num_hashes)
-    ]
-    return ex.groupBy("id").agg(*aggs)
 
 
 def band_keys(sig_cols: list[str], bands: int, rows: int) -> Column:
@@ -177,8 +146,7 @@ def minhash_near_dup_pairs(
     # shingle arrays 16× per doc is the data amplification that kills this
     # at scale. Shingle sets re-join once, keyed by id, for verification.
     # Signatures derive from the SAME persisted shingle sets (one
-    # tokenization pass total — re-calling minhash_table here would
-    # re-tokenize the whole corpus).
+    # tokenization pass total).
     sig_cols = [f"mh{h}" for h in range(num_hashes)]
     sig = (
         base.select("id", F.explode("sh").alias("s"))
@@ -211,7 +179,7 @@ def minhash_near_dup_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Exact n-gram Jaccard via common-shingle join (SQL-expressible oracle path)
+# Exact n-gram Jaccard via prefix-filtered candidates
 # ---------------------------------------------------------------------------
 
 
@@ -224,45 +192,29 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_df: int | None = None,
     hash_shingles: bool = False,
-    candidates: str = "join",
+    candidates: str = "prefix",
     materialize=None,
     sets: DataFrame | None = None,
 ) -> DataFrame:
     """All pairs with exact shingle-set Jaccard ≥ threshold.
 
-    |A ∩ B| falls out of the shingle equi-join's group count; |A ∪ B| =
-    |A| + |B| − |A ∩ B| from per-doc set sizes. Pairs sharing no shingle
-    (jaccard 0) never materialize — the join is the candidate filter.
-
-    candidates="prefix" swaps the candidate stage for ALL-PAIRS prefix
-    filtering with a length filter (Bayardo/Ma/Srikant WWW'07; Xiao et al.
-    WWW'08 ppjoin — public algorithms), the standard next step beyond the
-    blunt max_df cap when Σ df² still explodes: order the shingle universe
-    globally by (document frequency asc, shingle asc) and self-join each
-    doc's FIRST p = |A| − ⌈t·|A|⌉ + 1 shingles only. Completeness: for any
-    pair with J ≥ t, the globally-smallest common shingle w must sit inside
-    BOTH prefixes — if w fell outside A's prefix, every common shingle
-    would lie in A's suffix of size ⌈t·|A|⌉ − 1 < t·|A| ≤ |A ∩ B|, a
-    contradiction (symmetrically for B) — so the prefix self-join loses no
-    qualifying pair, and the exact array_intersect verify keeps output
-    byte-identical to candidates="join" (pytest-asserted). The win is NOT
-    the 1−t prefix truncation; it is that the ordering pushes HIGH-df
-    shingles (the d² cost centers) out of the prefixes entirely, so join
-    cost concentrates on rare shingles. The price is carrying each doc's
-    sorted shingle array through the verify join — and measurement says
-    the price is small: on the sf0.1 corpus (local[32], best-of-2 cold,
-    release_all between samples, sequential runs only,
-    tools/bench_ngram_modes.py, 2026-08-20) prefix wins at EVERY
-    threshold — t=0.2: 12.9s vs 23.7s, t=0.5: 10.5s vs 20.2s, t=0.7:
-    10.0s vs 18.0s (1.8–1.9×, identical row counts asserted per cell).
-    "prefix" is therefore the production path for the standalone pair
-    queries; "join" remains the count-based oracle-shaped plan. In the
-    full dedup_e2e COMPOSITION the two modes measure flat at sf0.1
-    (cluster rounds + keep join dominate there), see BASELINE.md.
+    Candidates come from ALL-PAIRS prefix filtering with a length filter
+    (Bayardo/Ma/Srikant WWW'07; Xiao et al. WWW'08 ppjoin — public
+    algorithms): order the shingle universe globally by (document frequency
+    asc, shingle asc) and self-join each doc's FIRST p = |A| − ⌈t·|A|⌉ + 1
+    shingles only. Completeness: for any pair with J ≥ t, the
+    globally-smallest common shingle w must sit inside BOTH prefixes — if w
+    fell outside A's prefix, every common shingle would lie in A's suffix of
+    size ⌈t·|A|⌉ − 1 < t·|A| ≤ |A ∩ B|, a contradiction (symmetrically for
+    B) — so the prefix self-join loses no qualifying pair. The length filter
+    (J ≥ t ⇒ min(|A|,|B|) ≥ t·max(|A|,|B|)) prunes candidates before the
+    array-carrying verify join, and verification is array_intersect on the
+    sorted arrays, exact by construction. `candidates` accepts only
+    "prefix".
 
     max_df is the HOT-SHINGLE GUARD: a shingle shared by d documents
-    contributes d² rows to the self-join, so one stop-phrase shared by 10⁶
-    docs makes the plan quadratic on that key. Shingles with document
+    contributes d² rows to a shingle self-join, so one stop-phrase shared by
+    10⁶ docs makes the plan quadratic on that key. Shingles with document
     frequency > max_df are dropped from the universe — both from the
     intersection AND the set sizes, so the result is the exact Jaccard over
     the capped shingle universe (the standard IDF-style pruning: a shingle
@@ -271,36 +223,25 @@ def ngram_jaccard_pairs(
     anti-join. max_df=None keeps the uncapped oracle semantics.
 
     hash_shingles=True replaces each shingle string with xxhash64(shingle)
-    BEFORE the self-join: the join/groupBy keys become fixed-width longs
-    instead of variable-length strings, cutting shuffle bytes and hash/
-    compare cost on the Σ df² joined rows — the dominant stage. The result
-    is identical unless two distinct shingles of the SAME document collide
-    in 64 bits (expected collisions across a corpus with S distinct
-    shingles: S²/2⁶⁵ — ~10⁻⁷ even at S=10⁶; at 10¹²-doc scale this is the
-    intended production path, as the same hashing underlies the minhash
-    route). A same-doc collision would merge two shingles BEFORE
-    array_distinct sees the hashes, leaving duplicate (id, hash) rows in
-    the exploded table — inflating intersections multiplicatively in the
-    self-join as well as set sizes; same negligible probability, noted for
-    completeness. Default False: byte-exact oracle semantics.
+    before the prefix stage: join/sort keys become fixed-width longs. The
+    result is identical unless two distinct shingles of the SAME document
+    collide in 64 bits (expected collisions across a corpus with S distinct
+    shingles: S²/2⁶⁵ — ~10⁻⁷ even at S=10⁶); such a collision would leave a
+    duplicate (id, hash) row and inflate that doc's set size and
+    intersections. Default False: byte-exact oracle semantics.
 
-    materialize: df->df hook for the tokenize-once materialization of the
-    exploded shingle table (cluster-deploy seam, see minhash_near_dup_pairs).
-    Default: lazy localCheckpoint. Measured at sf0.1/local[32], best-of-2
-    cold (release_all between samples), 2026-08-18: string re-derive 78.8s,
-    string checkpoint 39.9s, hashed re-derive 50.4s, hashed checkpoint
-    26.3s — the checkpoint wins for BOTH key types (4 interpreted-HOF
-    tokenization passes cost more than the block write/read), and hashing
-    the keys before the checkpoint cuts the materialized bytes and the
-    self-join hash/compare cost on top. hash_shingles=True is therefore
-    the production default for the entry query; the bench-visible r3
-    regression (45.4s) was the string-key checkpoint.
+    materialize: df->df hook for the exploded shingle table and the sorted
+    per-doc array table (cluster-deploy seam, see minhash_near_dup_pairs).
+    Default: lazy localCheckpoint; callers dispose via
+    cache.release(result).
 
     sets: pre-tokenized shingle_sets(...) output shared across operators in
     a composition (see that docstring). The caller owns its materialization
     and disposal; the exploded table is then re-derived from the caller's
-    materialized blocks per consumer (codegen explode+hash over a block
-    scan) instead of being checkpointed a second time here."""
+    blocks instead of being checkpointed a second time here."""
+    if candidates != "prefix":
+        raise ValueError(f"candidates must be 'prefix', got {candidates!r}")
+    mat = materialize or (lambda d: d.localCheckpoint(eager=False))
     base = (
         sets
         if sets is not None
@@ -310,76 +251,35 @@ def ngram_jaccard_pairs(
     ex = base.select("id", F.explode("sh").alias("s")).select(
         "id", shingle.alias("s")
     )
-    # tokenize ONCE: every consumer below (hot-shingle count, both self-join
-    # sides, set sizes) otherwise re-runs the interpreted HOF shingling over
-    # the corpus — measured 4 full tokenization passes per query. Caller
-    # disposes via cache.release(result) — see minhash_near_dup_pairs.
-    # With caller-provided `sets` the upstream is already materialized, so
-    # the second checkpoint is skipped.
+    # tokenize ONCE: the hot-shingle count and the document-frequency join
+    # below both read ex, and each read would otherwise re-run the
+    # interpreted HOF shingling over the corpus. With caller-provided `sets`
+    # the upstream is already materialized, so the checkpoint is skipped.
     if sets is None:
-        ex = (materialize or (lambda d: d.localCheckpoint(eager=False)))(ex)
+        ex = mat(ex)
     if max_df is not None:
         hot = (
             ex.groupBy("s").agg(F.count("*").alias("_df")).where(F.col("_df") > max_df)
         )
         ex = ex.join(F.broadcast(hot.select("s")), "s", "left_anti")
-    if candidates == "prefix":
-        return _jaccard_prefix_filtered(ex, threshold, materialize)
-    if candidates != "join":
-        raise ValueError(f"candidates must be 'join' or 'prefix', got {candidates!r}")
-    # |capped shingle set| per doc == row count in ex (shingles are distinct
-    # per doc); identical to size(sh) when max_df is None
-    sizes = ex.groupBy("id").agg(F.count("*").alias("n"))
-    pairs = (
-        ex.alias("x")
-        .join(ex.alias("y"), "s")
-        .where(F.col("x.id") < F.col("y.id"))
-        .groupBy(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        pairs.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6).alias(
-                "jaccard"
-            ),
-        )
-    )
-    return out.where(F.col("jaccard") >= threshold)
-
-
-def _jaccard_prefix_filtered(ex: DataFrame, threshold: float, materialize) -> DataFrame:
-    """candidates="prefix" body of ngram_jaccard_pairs (see its docstring
-    for the completeness proof): ex is the (id, s) exploded distinct-shingle
-    table AFTER the hot-shingle guard.
-
-    Plan shape: one groupBy(s) for document frequencies, one join to tag
-    each (id, s) with its df, one groupBy(id) assembling the (df, s)-sorted
-    shingle array (struct sort = the global order), then the self-join runs
-    over EXPLODED PREFIXES ONLY. The doc table (sorted array + prefix) is
-    materialized once and read three times (prefix explode + both verify
-    sides) — same tokenize-once economics as the "join" path's checkpoint.
-    The length filter (J ≥ t ⇒ min(|A|,|B|) ≥ t·max(|A|,|B|)) prunes
-    candidates before the array-carrying verify join; verification is
-    array_intersect on the sorted fixed-order arrays, exact by construction.
-    """
+    # one groupBy(s) for document frequencies, one join to tag each (id, s)
+    # with its df, one groupBy(id) assembling the (df, s)-sorted shingle
+    # array (struct sort = the global order); the doc table is read three
+    # times (prefix explode + both verify sides), so it is materialized
     dfreq = ex.groupBy("s").agg(F.count("*").alias("_df"))
-    exd = ex.join(dfreq, "s")
-    docs_arr = exd.groupBy("id").agg(
+    docs_arr = ex.join(dfreq, "s").groupBy("id").agg(
         F.array_sort(F.collect_list(F.struct(F.col("_df"), F.col("s")))).alias("arr")
     )
     n = F.size("arr")
     p = (n - F.ceil(F.lit(threshold) * n) + 1).cast("int")
-    docs_arr = docs_arr.select(
-        "id",
-        n.alias("n"),
-        F.transform("arr", lambda e: e["s"]).alias("ss"),
-        F.transform(F.slice("arr", F.lit(1), p), lambda e: e["s"]).alias("pref"),
+    docs_arr = mat(
+        docs_arr.select(
+            "id",
+            n.alias("n"),
+            F.transform("arr", lambda e: e["s"]).alias("ss"),
+            F.transform(F.slice("arr", F.lit(1), p), lambda e: e["s"]).alias("pref"),
+        )
     )
-    docs_arr = (materialize or (lambda d: d.localCheckpoint(eager=False)))(docs_arr)
     pr = docs_arr.select("id", "n", F.explode("pref").alias("s"))
     cand = (
         pr.alias("x")

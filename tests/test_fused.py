@@ -2,8 +2,7 @@
 
 The fused scans must emit exactly the same violation-row multiset as the
 union of the individual check functions — same checks, severities, doc_ids,
-parts, and detail strings — and the suite must produce identical verdicts
-with fused_rows on and off.
+parts, and detail strings — both standalone and inside a run_suite pass.
 """
 
 from __future__ import annotations
@@ -48,7 +47,7 @@ def test_fused_doc_checks_match_standalone(spark):
     _same_multiset(fused_df, singles)
 
 
-def _planted(spark):
+def _planted_raw(spark):
     """Handcrafted docs hitting every ref- and span-level rule (the
     generator plants none of these): temp ext, legacy ext, over-long ref,
     temp+legacy overlap, unknown kind, binary-in-text, media-with-text,
@@ -66,13 +65,15 @@ def _planted(spark):
          "p2"),
         ("d_ok", [("text", "plain", None, 0), ("media", None, "fine.png", 1)], "p3"),
     ]
-    return annotate(
-        spark.createDataFrame(
-            [(d, [(k, t, r, o) for (k, t, r, o) in sp], p) for d, sp, p in rows],
-            "doc_id string, spans array<struct<kind:string,text:string,"
-            "media_ref:string,offset:int>>, part string",
-        )
+    return spark.createDataFrame(
+        [(d, [(k, t, r, o) for (k, t, r, o) in sp], p) for d, sp, p in rows],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>, part string",
     )
+
+
+def _planted(spark):
+    return annotate(_planted_raw(spark))
 
 
 def test_fused_ref_checks_match_standalone(spark):
@@ -125,27 +126,57 @@ def test_fused_toggles(spark):
     ) is None
 
 
-def test_suite_fused_equals_unfused(spark):
+def test_suite_row_checks_equal_standalone(spark):
+    """run_suite's row-level verdicts (the three fused scans inside the
+    suite pass, next to every other family) equal the union of the eleven
+    standalone check functions over the same corpus — on a generated
+    corpus with catalog and expectations, and on the planted ref/span
+    offenders."""
     from datachecker_spark.datagen import (
         generate_expected_fingerprints,
         generate_media_catalog,
     )
     from datachecker_spark.runner import SuiteConfig, run_suite
 
+    row_checks = [
+        stats.CHECK_EMPTY, stats.CHECK_LARGE, stats.CHECK_FUTURE, stats.CHECK_STALE,
+        predicates.CHECK_NAME_RULES, predicates.CHECK_NAME_LEN,
+        predicates.CHECK_REF_LEN, predicates.CHECK_TEMP, predicates.CHECK_LEGACY,
+        predicates.CHECK_KIND, predicates.CHECK_JSON, confidential.CHECK_NAME,
+    ]
     raw = generate_documents(
         spark, 1500, dup_rate=0.1, dangling_rate=0.03, conf_rate=0.02, seed=42
     ).localCheckpoint(eager=True)
-    catalog = generate_media_catalog(spark)
-    expected = generate_expected_fingerprints(raw).localCheckpoint(eager=True)
-
-    def verdicts(fused_rows: bool):
-        res = run_suite(
-            raw, media_catalog=catalog, expected_fingerprints=expected,
-            config=SuiteConfig(timestamp_now=_NOW, fused_rows=fused_rows),
+    corpora = [
+        (raw, dict(
+            media_catalog=generate_media_catalog(spark),
+            expected_fingerprints=generate_expected_fingerprints(raw)
+            .localCheckpoint(eager=True),
+        )),
+        (_planted_raw(spark), {}),
+    ]
+    seen: set[str] = set()
+    for raw_docs, inputs in corpora:
+        res = run_suite(raw_docs, config=SuiteConfig(timestamp_now=_NOW), **inputs)
+        docs = annotate(raw_docs)
+        want = (
+            stats.check_empty_docs(docs)
+            .unionByName(stats.check_large_docs(docs))
+            .unionByName(predicates.check_doc_names(docs))
+            .unionByName(predicates.check_name_length(docs))
+            .unionByName(predicates.check_ref_path_length(docs))
+            .unionByName(predicates.check_temp_refs(docs))
+            .unionByName(predicates.check_legacy_refs(docs))
+            .unionByName(predicates.check_kind_consistency(docs))
+            .unionByName(predicates.check_json_spans(docs))
+            .unionByName(confidential.check_confidential(docs))
+            .unionByName(stats.check_timestamps(docs, now=_NOW))
         )
-        return res.violations.groupBy(_KEY).count().localCheckpoint(eager=True)
-
-    _same_multiset(verdicts(True), verdicts(False))
+        got = res.violations.where(F.col("check").isin(row_checks))
+        _same_multiset(got, want)
+        seen |= {r["check"] for r in got.select("check").distinct().collect()}
+        res.release()
+    assert len(seen) >= 8, seen
 
 
 def test_fused_now_pinned_to_literal(spark):

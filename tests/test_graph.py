@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from datachecker_spark import cache
@@ -153,6 +154,18 @@ def test_cc_releases_intermediate_blocks(spark):
     out.collect()
     cache.release(out)
     assert sc._jsc.getPersistentRDDs().size() <= baseline
+
+
+def test_cc_non_convergence_releases_blocks(spark):
+    """A loop that runs out of rounds raises and leaves no block behind:
+    a 64-node path needs several rounds, so max_iterations=1 fails."""
+    cache.release_all(spark)
+    sc = spark.sparkContext
+    baseline = sc._jsc.getPersistentRDDs().size()
+    edges = spark.createDataFrame([(i, i + 1) for i in range(63)], ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges, max_iterations=1)
+    assert sc._jsc.getPersistentRDDs().size() == baseline
 
 
 def test_dedup_e2e_real_pairs(spark):

@@ -56,7 +56,7 @@ def test_zip_imports_standalone():
         "import datachecker_spark.runner, datachecker_spark.constraints.fused, "
         "datachecker_spark.entry_queries_suite, datachecker_spark.streaming; "
         "from datachecker_spark.runner import SuiteConfig; "
-        "print('ZIP_IMPORT_OK', SuiteConfig().fused_rows)" % out
+        "print('ZIP_IMPORT_OK', SuiteConfig().drift)" % out
     )
     r = subprocess.run(
         [sys.executable, "-c", code],

@@ -15,6 +15,7 @@ accounting at each lifecycle point — no GC, no polling, no timeouts.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datachecker_spark import cache
@@ -65,6 +66,33 @@ def test_run_suite_no_drift_releases_to_zero(spark):
     held = _n_persistent(spark) - base
     assert held == 3, f"expected 3 result blocks (no drift), got {held}"
     res.release()
+    assert _n_persistent(spark) == base
+
+
+def test_run_suite_failure_releases_to_zero(spark, monkeypatch):
+    """A run_suite pass that raises releases the corpus cache and every
+    block its background jobs made before re-raising: once while the
+    branches are built (a media catalog without the join column), once
+    inside the drift job while the union and profile jobs run."""
+    from pyspark.errors import AnalysisException
+
+    from datachecker_spark.constraints import drift
+    from datachecker_spark.datagen import generate_expected_fingerprints
+
+    cache.release_all(spark)
+    docs = generate_documents(spark, 300, dup_rate=0.1, seed=5)
+    base = _n_persistent(spark)
+    with pytest.raises(AnalysisException):
+        run_suite(docs, media_catalog=spark.range(3))
+    assert _n_persistent(spark) == base
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("drift failed")
+
+    expected = generate_expected_fingerprints(docs)
+    monkeypatch.setattr(drift, "check_drift", boom)
+    with pytest.raises(RuntimeError, match="drift failed"):
+        run_suite(docs, expected_fingerprints=expected)
     assert _n_persistent(spark) == base
 
 
@@ -124,7 +152,9 @@ def test_minhash_persist_mode_seam(spark):
         flat, threshold=0.2, hash_shingles=True, materialize=mat_track
     )
     got = {(r["id_a"], r["id_b"]) for r in out.collect()}
-    assert len(tracked) == 1 and _n_persistent(spark) - base == 1
-    assert cache.release(*tracked) == 1
+    # two hooked materializations: the exploded shingle table and the
+    # sorted per-doc array table of the prefix filter
+    assert len(tracked) == 2 and _n_persistent(spark) - base == 2
+    assert cache.release(*tracked) == 2
     assert _n_persistent(spark) == base
     assert got >= expected  # exact-jaccard superset sanity (no LSH pruning)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datachecker_spark import textops as X
@@ -58,40 +59,76 @@ def test_ngram_jaccard_hashed_shingles_identical(spark):
     assert exact == hashed and len(exact) > 10
 
 
+def _brute_force_jaccard(rows, threshold, max_df=None):
+    """Driver-side all-pairs oracle: pure-Python bigram-set Jaccard over
+    the max_df-capped shingle universe (shingles in more than max_df docs
+    are dropped from every set, as ngram_jaccard_pairs documents)."""
+    def shset(text):
+        toks = text.lower().split()
+        return {f"{a} {b}" for a, b in zip(toks, toks[1:])}
+
+    sets = {i: shset(tx) for i, tx in rows}
+    if max_df is not None:
+        dfreq: dict[str, int] = {}
+        for sh in sets.values():
+            for w in sh:
+                dfreq[w] = dfreq.get(w, 0) + 1
+        sets = {i: {w for w in sh if dfreq[w] <= max_df} for i, sh in sets.items()}
+    sets = {i: sh for i, sh in sets.items() if sh}
+    want = {}
+    for a in sets:
+        for b in sets:
+            if a < b and sets[a] & sets[b]:
+                inter = len(sets[a] & sets[b])
+                j = round(inter / len(sets[a] | sets[b]), 6)
+                if j >= threshold:
+                    want[(a, b)] = j
+    return want
+
+
+_PREFIX_CASES = (
+    dict(threshold=0.1),
+    dict(threshold=0.5, hash_shingles=True),
+    dict(threshold=0.2, max_df=10, hash_shingles=True),
+    dict(threshold=0.9),
+)
+
+
+def _assert_matches_oracle(spark, rows, **kw):
+    want = _brute_force_jaccard(rows, kw["threshold"], kw.get("max_df"))
+    got = {(r["id_a"], r["id_b"]): r["jaccard"]
+           for r in X.ngram_jaccard_pairs(_df(spark, rows), **kw).collect()}
+    assert set(got) == set(want), kw
+    assert all(abs(got[k] - want[k]) < 1e-9 for k in want), kw
+    return got
+
+
 def test_ngram_jaccard_prefix_filter_identical(spark):
     """candidates="prefix" (All-Pairs prefix filtering + length filter +
-    array_intersect verify) must emit exactly the same (pair, jaccard) set
-    as the count-join path — across thresholds (the prefix length depends
-    on t), with and without hashed shingles, and with the max_df hot guard
-    active (prefix ordering runs over the capped universe)."""
+    array_intersect verify) must emit exactly the (pair, jaccard) set of
+    the brute-force oracle on a near-duplicate family of one base text —
+    across thresholds (the prefix length depends on t), with and without
+    hashed shingles, and with the max_df hot guard active (prefix ordering
+    then runs over the capped universe). A candidate mode other than
+    "prefix" is rejected."""
     rows = [("base", BASE), ("near", NEAR), ("other", OTHER)] + [
         (f"d{i}", f"{BASE} suffix variant {i} {'pad ' * (i % 5)}") for i in range(20)
     ] + [(f"s{i}", f"unique little doc number {i}") for i in range(5)]
-    df = _df(spark, rows)
-
-    def pairs(**kw):
-        return {(r["id_a"], r["id_b"]): r["jaccard"]
-                for r in X.ngram_jaccard_pairs(df, **kw).collect()}
-
-    for kw in (
-        dict(threshold=0.1),
-        dict(threshold=0.5, hash_shingles=True),
-        dict(threshold=0.2, max_df=10, hash_shingles=True),
-        dict(threshold=0.9),
-    ):
-        join_path = pairs(candidates="join", **kw)
-        prefix_path = pairs(candidates="prefix", **kw)
-        assert join_path == prefix_path, kw
-    assert len(pairs(candidates="prefix", threshold=0.1)) > 10
+    for kw in _PREFIX_CASES:
+        got = _assert_matches_oracle(spark, rows, candidates="prefix", **kw)
+        if kw["threshold"] == 0.1:
+            assert len(got) > 10
+    with pytest.raises(ValueError, match="prefix"):
+        X.ngram_jaccard_pairs(_df(spark, rows), candidates="bucket")
 
 
 def test_ngram_jaccard_random_corpus_vs_python_oracle(spark):
-    """Seeded-random corpus vs an INDEPENDENT driver-side brute-force
-    oracle (pure-Python set Jaccard over all pairs): join==prefix
-    equivalence alone would miss a bug both paths inherit from a shared
-    upstream stage (tokenize/shingle/dedup), so this pins the whole
-    operator to a from-scratch implementation on a corpus with heavy
-    shingle sharing, tiny docs, and threshold-boundary pairs."""
+    """ngram_jaccard_pairs vs an INDEPENDENT driver-side brute-force oracle
+    (pure-Python set Jaccard over all pairs), which pins the whole operator
+    — tokenize, shingle, (df, s)-ordered prefixes, length filter,
+    array_intersect verify — to a from-scratch implementation on a
+    seeded-random corpus with heavy shingle sharing, tiny docs and
+    threshold-boundary pairs."""
     import random
 
     rng = random.Random(20260820)
@@ -100,28 +137,8 @@ def test_ngram_jaccard_random_corpus_vs_python_oracle(spark):
         (f"r{i}", " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 30))))
         for i in range(50)
     ]
-    t = 0.3
-
-    def shset(text):
-        toks = text.split()
-        return {f"{a} {b}" for a, b in zip(toks, toks[1:])}
-
-    sets = {i: shset(tx) for i, tx in rows if shset(tx)}
-    want = {}
-    for a in sets:
-        for b in sets:
-            if a < b and sets[a] & sets[b]:
-                inter = len(sets[a] & sets[b])
-                j = round(inter / len(sets[a] | sets[b]), 6)
-                if j >= t:
-                    want[(a, b)] = j
-
-    df = _df(spark, rows)
-    for cand in ("join", "prefix"):
-        got = {(r["id_a"], r["id_b"]): r["jaccard"]
-               for r in X.ngram_jaccard_pairs(df, threshold=t, candidates=cand).collect()}
-        assert set(got) == set(want), cand
-        assert all(abs(got[k] - want[k]) < 1e-9 for k in want), cand
+    for kw in (dict(threshold=0.3),) + _PREFIX_CASES:
+        _assert_matches_oracle(spark, rows, **kw)
 
 
 def test_minhash_near_dups(spark):
@@ -143,7 +160,7 @@ def test_minhash_identical_docs(spark):
 
 def test_shared_shingle_sets_seam(spark):
     """The round-5 composition seam: minhash_near_dup_pairs and
-    ngram_jaccard_pairs (both candidate modes) fed one caller-materialized
+    ngram_jaccard_pairs fed one caller-materialized
     shingle_sets table must return byte-identical rows to their standalone
     (tokenize-internally) forms — the seam only removes a redundant
     tokenization pass, never changes a value."""
@@ -157,19 +174,14 @@ def test_shared_shingle_sets_seam(spark):
     assert rows(X.minhash_near_dup_pairs(df, threshold=0.2, sets=shared)) == rows(
         X.minhash_near_dup_pairs(df, threshold=0.2)
     )
-    for cand in ("join", "prefix"):
-        for hashed in (False, True):
-            assert rows(
-                X.ngram_jaccard_pairs(
-                    df, threshold=0.2, max_df=10, hash_shingles=hashed,
-                    candidates=cand, sets=shared,
-                )
-            ) == rows(
-                X.ngram_jaccard_pairs(
-                    df, threshold=0.2, max_df=10, hash_shingles=hashed,
-                    candidates=cand,
-                )
+    for hashed in (False, True):
+        assert rows(
+            X.ngram_jaccard_pairs(
+                df, threshold=0.2, max_df=10, hash_shingles=hashed, sets=shared
             )
+        ) == rows(
+            X.ngram_jaccard_pairs(df, threshold=0.2, max_df=10, hash_shingles=hashed)
+        )
 
 
 def test_simhash_properties(spark):

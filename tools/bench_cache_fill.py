@@ -8,9 +8,15 @@ first samples). This tool isolates which sub-stage stops scaling:
             (full derived-column compute, NO cache write). A count() probe
             is useless here: Catalyst prunes every column for count, so
             scan+count measures parquet FOOTERS, not the pipeline.
-  fill      scan + annotate + MEMORY_AND_DISK persist + count (= run_suite's)
-  fill_ser  same with MEMORY_AND_DISK_SER (serialized store: one compact
-            byte buffer per block instead of per-row on-heap objects)
+  fill        scan + annotate + MEMORY_AND_DISK persist + count (= run_suite's;
+              PySpark's MEMORY_AND_DISK stores blocks serialized)
+  fill_deser  same with MEMORY_AND_DISK_DESER (blocks kept as deserialized
+              on-heap objects instead of serialized bytes)
+
+Optional stages: ckpt (eager localCheckpoint instead of persist),
+fill_nocomp (columnar cache compression off), fill_bigbatch (4x larger
+cached batches), and an _mbN suffix on any stage (e.g. fill_mb32) to set
+the input split size in MB.
 
 Usage: python tools/bench_cache_fill.py [--docs-path /tmp/doccheck_bench/4000000/docs]
        [--cores 4,16] [--repeat 2] [--taskset]

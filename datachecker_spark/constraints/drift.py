@@ -11,7 +11,9 @@ shifted pair, passes A-vs-A").
 * categorical: chi-square goodness-of-fit of each partition's histogram
   against the normalized median histogram.
 * numeric: Kolmogorov-Smirnov distance of each partition's ECDF (on a fixed
-  log-spaced grid) against the per-bucket median ECDF.
+  log-spaced grid) against the per-bucket median ECDF, and optionally the
+  Population Stability Index of its coarser histogram against the
+  normalized median histogram.
 
 Everything is Spark SQL over tiny aggregates — histograms via groupBy, the
 median over the (n_parts × n_values) proportions table, and significance via
@@ -21,19 +23,25 @@ c(α)/sqrt(n) for one-sample KS). No scipy, no Python in the data path: at
 it stays JVM-side with partial aggregation; all statistics run on the small
 aggregate.
 
-JOB BUDGET (round-3 scaling fix): building a drift plan fires one Spark job
-per statistic — its corpus reduction (`obs` for chi-square, `counts` for KS
-and PSI), eagerly localCheckpointed because each appears several times
-downstream (parts totals, the distinct value/bucket set, the dense-grid
-join) and Catalyst demonstrably does NOT collapse those copies (join-key
-`isnotnull` pushdown and column pruning break subtree identity, so
-ReuseExchange never matches — measured: the checkpoint-free form re-ran the
-KS bucket chain ~10× and was 6× slower end-to-end). The KS and PSI buckets
-come from a data-independent log grid (_log_bucket), so no job computes
-cut points and none are collected into plan literals.
+JOB BUDGET: every statistic comes from ONE corpus reduction,
+groupBy(part, v, b_ks, b_psi).count(), folded into a long (check, part,
+key, count) table and eagerly checkpointed once (_drift_scores). The long
+table is read several times downstream (part totals, the key set, the
+dense-grid join) and Catalyst demonstrably does NOT collapse those copies
+(join-key `isnotnull` pushdown and column pruning break subtree identity,
+so ReuseExchange never matches — measured: a checkpoint-free KS re-ran
+its bucket chain ~10× and was 6× slower end-to-end). The three statistics
+are then scored in one plan keyed by statistic: one dense grid, one
+median, one score aggregation. The KS and PSI buckets come from a
+data-independent log grid (_log_bucket), so no job computes cut points
+and none are collected into plan literals. Measured on the
+resume_lineage benchmark corpus (20k docs, 64 parts, local[4]): chi2 +
+KS + PSI fire 16 Spark jobs (reduction, checkpoint and the scoring
+plan's AQE stages), where three separate reductions and plans fired
+39-41.
 
 The Bonferroni partition count, previously two more driver-blocking
-`.count()` jobs, is instead a broadcast one-row aggregate cross-joined into
+`.count()` jobs, is instead a broadcast per-statistic count joined into
 the plan, with the normal quantile inside the Wilson-Hilferty critical value
 evaluated as Column arithmetic (Acklam's rational approximation — plain
 +,*,log,sqrt — public algorithm), so per-test α depends on the
@@ -112,11 +120,175 @@ def _wilson_hilferty_crit(dof: Column, z: Column) -> Column:
     return k * F.pow(inner, 3)
 
 
-def _with_nparts(df: DataFrame, parts: DataFrame) -> DataFrame:
-    """Cross-join the (broadcast, one-row) partition count into df as
-    `n_parts` — the in-plan replacement for a driver-side parts.count()."""
-    np_row = parts.agg(F.count("*").alias("n_parts"))
-    return df.crossJoin(F.broadcast(np_row))
+def _log_bucket(x: Column, per_octave: int = 16) -> Column:
+    """Deterministic monotone bucketing: sign(x)·floor(per_octave·log2(1+|x|)).
+
+    A data-INDEPENDENT evaluation grid for the KS ECDF: log-spaced cut
+    points at ~4.4% relative resolution (2^(1/16)−1), no percentile job, no
+    collect, no plan literals — the whole KS reduction becomes one scan of
+    the cached numeric column. Monotone in x (including negatives), so the
+    bucket ECDF is the true ECDF evaluated on the grid and max|ΔECDF| is the
+    standard grid lower bound of the KS statistic. A null x has a null
+    bucket."""
+    mag = F.floor(F.log2(F.abs(x) + F.lit(1.0)) * F.lit(float(per_octave))).cast(
+        "long"
+    )
+    return F.signum(x).cast("long") * mag
+
+
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def _entry(check: str, key: Column, order: Column) -> Column:
+    return F.struct(
+        F.lit(check).alias("check"), key.alias("k"), order.cast("long").alias("o")
+    )
+
+
+def _drift_scores(
+    docs: DataFrame,
+    categorical: Column | str | None,
+    numeric: Column | str | None,
+    *,
+    ks: bool,
+    psi: bool,
+    alpha: float = 0.01,
+    psi_threshold: float = 0.2,
+    psi_per_octave: int = 4,
+    eps: float = 1e-6,
+    materialize=None,
+) -> DataFrame:
+    """The shared implementation of every drift statistic: one corpus
+    reduction, one scoring plan. Returns one row per (statistic, part):
+    (check, part, score, dof, n_part, crit, drifted), where check names
+    the statistic (CHECK_CHI2 / CHECK_KS / CHECK_PSI), score is the
+    chi-square statistic, the KS distance or the PSI, and crit is the
+    Bonferroni critical value (the PSI threshold for PSI).
+
+    REDUCTION: groupBy(part, v, b_ks, b_psi).count() over the corpus —
+    v the categorical value, b_ks / b_psi the numeric value's log bucket
+    at 16 and psi_per_octave per octave (null when the value is null).
+    Grouping by both bucket columns keeps every PSI grid exact, whether
+    or not psi_per_octave divides 16. The reduction is folded at once
+    into a long table (check, part, k, o, c) — k the statistic's key as a
+    string (the value, or the bucket), o the KS ordering (the bucket) —
+    and that table is checkpointed, the only materialization.
+
+    SCORING, all statistics at once, keyed by check: one dense
+    part × key grid (absent cells are real zeros), one median per key
+    (the robust baseline), one aggregation per (check, part).
+
+    NULLS, as each statistic has always treated them: chi-square counts
+    a null category in the part's total but scores no cell for it; KS and
+    PSI drop null values, so a part whose numeric values are all null
+    appears in the chi-square rows only, and the Bonferroni part count of
+    KS is the number of parts with at least one numeric value."""
+    cols: list[Column] = [F.col("part")]
+    entries: list[Column] = []
+    if categorical is not None:
+        cols.append(_col(categorical).alias("v"))
+        # the key is the value's string form, taken after the grouping
+        entries.append(_entry(CHECK_CHI2, F.col("v").cast("string"), F.lit(0)))
+    if numeric is not None:
+        x = _col(numeric).cast("double")
+        for on, check, b, per_octave in (
+            (ks, CHECK_KS, "b_ks", 16), (psi, CHECK_PSI, "b_psi", psi_per_octave),
+        ):
+            if on:
+                cols.append(_log_bucket(x, per_octave).alias(b))
+                entries.append(_entry(check, F.col(b).cast("string"), F.col(b)))
+    if not entries:
+        raise ValueError("no drift statistic requested")
+    check = F.col("check")
+    is_chi, is_ks = check == CHECK_CHI2, check == CHECK_KS
+    sel = docs.select(*cols)
+    counts = sel.groupBy(*sel.columns).agg(F.count("*").alias("c"))
+    long = (
+        counts.select("part", "c", F.explode(F.array(*entries)).alias("e"))
+        .select("part", "c", "e.*")
+        # a null value is no KS/PSI observation; a null category still
+        # counts toward its part's chi-square total
+        .where(is_chi | F.col("o").isNotNull())
+        .groupBy("check", "part", "k", "o")
+        .agg(F.sum("c").alias("c"))
+    )
+    # the corpus reduction happens exactly once: the long table is read
+    # by the part totals, the key set and the dense join, and Catalyst
+    # does NOT collapse those copies (see module docstring). Release is
+    # DETERMINISTIC, not GC-based (the ContextCleaner path is dead from
+    # Python — cache.py): the runner's _mat_track hook records this block
+    # and run_suite releases it as soon as the final drift block exists.
+    long = (materialize or (lambda d: d.localCheckpoint(eager=True)))(long)
+    parts = long.groupBy("check", "part").agg(F.sum("c").alias("n_part"))
+    keys = long.select("check", "k", "o").distinct()
+    dense = (
+        parts.join(F.broadcast(keys), "check")
+        .join(long.select("check", "part", "k", "c"), ["check", "part", "k"], "left")
+        .fillna({"c": 0})
+    )
+    # p: the cell's proportion (chi-square, PSI) or the part's ECDF at
+    # the bucket (KS)
+    ecdf = F.sum("c").over(W.partitionBy("check", "part").orderBy("o"))
+    dense = dense.withColumn(
+        "p", F.when(is_ks, ecdf).otherwise(F.col("c")) / F.col("n_part")
+    )
+    # robust baseline: median per key; proportions renormalized to sum 1
+    med = dense.groupBy("check", "k").agg(F.median("p").alias("m"))
+    msum = med.groupBy("check").agg(F.sum("m").alias("msum"))
+    baseline = med.join(F.broadcast(msum), "check").select(
+        "check", "k",
+        F.when(is_ks, F.col("m")).otherwise(F.col("m") / F.col("msum")).alias("base"),
+    )
+    g = dense.join(F.broadcast(baseline), ["check", "k"])
+    p, base = F.col("p"), F.col("base")
+    # chi-square: continuity floor keeps zero-median cells from exploding
+    # the statistic; PSI: proportions floored at eps (the standard
+    # zero-cell fix)
+    e = F.greatest(base * F.col("n_part"), F.lit(0.5))
+    pf, qf = F.greatest(p, F.lit(float(eps))), F.greatest(base, F.lit(float(eps)))
+    contrib = (
+        F.when(is_chi, (F.col("c") - e) ** 2 / e)
+        .when(is_ks, F.abs(p - base))
+        .otherwise((pf - qf) * F.log(pf / qf))
+    )
+    per_part = (
+        g.withColumn("_c", contrib)
+        .groupBy("check", "part")
+        .agg(
+            F.sum("_c").alias("_sum"),
+            F.max("_c").alias("_max"),
+            (F.count("*") - 1).alias("dof"),
+            F.min("n_part").alias("n_part"),
+        )
+        .withColumn("score", F.when(is_ks, F.col("_max")).otherwise(F.col("_sum")))
+    )
+    # Bonferroni: α is divided by the statistic's part count, a broadcast
+    # per-check count joined into the plan (no driver-side count)
+    n_parts = parts.groupBy("check").agg(F.count("*").alias("n_parts"))
+    per_part = per_part.join(F.broadcast(n_parts), "check")
+    alpha_eff = F.lit(alpha) / F.greatest(F.col("n_parts"), F.lit(1))
+    chi_crit = _wilson_hilferty_crit(
+        F.greatest(F.col("dof"), F.lit(1)), -_norm_ppf_col(alpha_eff)
+    )
+    # c(α) = sqrt(-ln(α/2)/2), columnar so α may depend on the runtime count
+    ks_crit = F.sqrt(-0.5 * F.log(alpha_eff / 2.0)) / F.sqrt(
+        F.col("n_part").cast("double")
+    )
+    crit = (
+        F.when(is_chi, chi_crit)
+        .when(is_ks, ks_crit)
+        .otherwise(F.lit(float(psi_threshold)))
+    )
+    return per_part.select(
+        "check",
+        "part",
+        F.round("score", 6).alias("score"),
+        "dof",
+        "n_part",
+        F.round(crit, 6).alias("crit"),
+        (F.col("score") > crit).alias("drifted"),
+    )
 
 
 def chi_square_drift(
@@ -131,74 +303,14 @@ def chi_square_drift(
     α is divided by the number of partitions (Bonferroni) — testing every
     partition at per-test α flags ~α·n_parts clean partitions by chance;
     the family-wise correction keeps the false-alarm rate at α overall.
-    The partition count enters the plan as a broadcast scalar (no job is
-    fired building this plan). materialize: df->df hook for the aggregate
-    checkpoint (runner.materializer — cluster deploys swap in reliable
-    checkpoint/persist); default localCheckpoint.
-    Returns (part, stat, dof, crit, drifted).
+    A view of _drift_scores (one reduction checkpoint through
+    `materialize`, default localCheckpoint). Returns (part, stat, dof,
+    crit, drifted).
     """
-    val = F.col(value) if isinstance(value, str) else value
-    obs = docs.select("part", val.alias("v")).groupBy("part", "v").agg(
-        F.count("*").alias("a")
-    )
-    # the corpus reduction happens exactly once: obs is read by parts /
-    # values / the dense join, and Catalyst does NOT collapse those copies
-    # (see module docstring). Release is DETERMINISTIC, not GC-based (the
-    # ContextCleaner path is dead from Python — cache.py): the runner's
-    # _mat_track hook records this block and run_suite releases it as soon
-    # as the final drift block is materialized. The runner runs this whole
-    # build on a background thread.
-    obs = (materialize or (lambda d: d.localCheckpoint(eager=True)))(obs)
-    parts = obs.groupBy("part").agg(F.sum("a").alias("n_part"))
-    values = obs.select("v").distinct()
-    # dense part×value grid: absent cells are real zeros in the test
-    dense = (
-        parts.crossJoin(values).join(obs, ["part", "v"], "left").fillna({"a": 0})
-    )
-    dense = dense.withColumn("prop", F.col("a") / F.col("n_part"))
-    # robust baseline: median proportion per value, renormalized to sum 1
-    med = dense.groupBy("v").agg(F.median("prop").alias("m"))
-    med_norm = med.crossJoin(F.broadcast(med.agg(F.sum("m").alias("msum"))))
-    baseline = med_norm.select("v", (F.col("m") / F.col("msum")).alias("p_base"))
-    g = dense.join(F.broadcast(baseline), "v")
-    # continuity floor keeps zero-median cells from exploding the statistic
-    e = F.greatest(F.col("p_base") * F.col("n_part"), F.lit(0.5))
-    contrib = (F.col("a") - e) ** 2 / e
-    per_part = (
-        g.withColumn("_c", contrib)
-        .groupBy("part")
-        .agg(
-            F.sum("_c").alias("stat"),
-            (F.count("*") - 1).alias("dof"),
-            F.min("n_part").alias("n_part"),
-        )
-    )
-    per_part = _with_nparts(per_part, parts)
-    alpha_eff = F.lit(alpha) / F.greatest(F.col("n_parts"), F.lit(1))
-    z = -_norm_ppf_col(alpha_eff)
-    crit = _wilson_hilferty_crit(F.greatest(F.col("dof"), F.lit(1)), z)
-    return per_part.select(
-        "part",
-        F.round("stat", 6).alias("stat"),
-        "dof",
-        F.round(crit, 6).alias("crit"),
-        (F.col("stat") > crit).alias("drifted"),
-    )
-
-
-def _log_bucket(x: Column, per_octave: int = 16) -> Column:
-    """Deterministic monotone bucketing: sign(x)·floor(per_octave·log2(1+|x|)).
-
-    A data-INDEPENDENT evaluation grid for the KS ECDF: log-spaced cut
-    points at ~4.4% relative resolution (2^(1/16)−1), no percentile job, no
-    collect, no plan literals — the whole KS reduction becomes one scan of
-    the cached numeric column. Monotone in x (including negatives), so the
-    bucket ECDF is the true ECDF evaluated on the grid and max|ΔECDF| is the
-    standard grid lower bound of the KS statistic."""
-    mag = F.floor(F.log2(F.abs(x) + F.lit(1.0)) * F.lit(float(per_octave))).cast(
-        "long"
-    )
-    return F.signum(x).cast("long") * mag
+    return _drift_scores(
+        docs, value, None, ks=False, psi=False, alpha=alpha,
+        materialize=materialize,
+    ).select("part", F.col("score").alias("stat"), "dof", "crit", "drifted")
 
 
 def ks_drift(
@@ -214,50 +326,15 @@ def ks_drift(
     ECDFs are evaluated on the fixed log-spaced grid (_log_bucket), so the
     statistic is exact on the grid — a lower bound of the true KS at ~4.4%
     relative resolution, which is what matters for drift flagging at
-    scale. This builder fires one job, the bucket-count checkpoint (a
-    percentile grid was measured as the single most expensive drift stage,
-    9.5s of the 13.6s drift wall at 1M docs/8 cores, and its cut points
-    had to be driver-collected into plan literals). Returns
-    (part, ks, n_part, crit, drifted).
+    scale (a percentile grid was measured as the single most expensive
+    drift stage, 9.5s of the 13.6s drift wall at 1M docs/8 cores, and its
+    cut points had to be driver-collected into plan literals). A view of
+    _drift_scores. Returns (part, ks, n_part, crit, drifted).
     """
-    val = (F.col(value) if isinstance(value, str) else value).cast("double")
-    base = docs.select("part", val.alias("x")).where(F.col("x").isNotNull())
-    bucket = _log_bucket(F.col("x"))
-    counts = base.select("part", bucket.alias("b")).groupBy("part", "b").agg(
-        F.count("*").alias("c")
-    )
-    # one corpus scan total; all ECDF math reads the tiny
-    # (n_parts × grid) aggregate (localCheckpoint: see chi_square_drift)
-    counts = (materialize or (lambda d: d.localCheckpoint(eager=True)))(counts)
-    parts = counts.groupBy("part").agg(F.sum("c").alias("n_part"))
-    buckets = counts.select("b").distinct()
-    dense = (
-        parts.crossJoin(buckets)
-        .join(counts, ["part", "b"], "left")
-        .fillna({"c": 0})
-    )
-    wp = W.partitionBy("part").orderBy("b")
-    dense = dense.withColumn("ecdf", F.sum("c").over(wp) / F.col("n_part"))
-    med = dense.groupBy("b").agg(F.median("ecdf").alias("ecdf_base"))
-    per_part = (
-        dense.join(F.broadcast(med), "b")
-        .withColumn("_d", F.abs(F.col("ecdf") - F.col("ecdf_base")))
-        .groupBy("part")
-        .agg(F.max("_d").alias("ks"), F.min("n_part").alias("n_part"))
-    )
-    per_part = _with_nparts(per_part, parts)
-    alpha_eff = F.lit(alpha) / F.greatest(F.col("n_parts"), F.lit(1))
-    # c(α) = sqrt(-ln(α/2)/2), columnar so α may depend on the runtime count
-    crit = F.sqrt(-0.5 * F.log(alpha_eff / 2.0)) / F.sqrt(
-        F.col("n_part").cast("double")
-    )
-    return per_part.select(
-        "part",
-        F.round("ks", 6).alias("ks"),
-        "n_part",
-        F.round(crit, 6).alias("crit"),
-        (F.col("ks") > crit).alias("drifted"),
-    )
+    return _drift_scores(
+        docs, None, value, ks=True, psi=False, alpha=alpha,
+        materialize=materialize,
+    ).select("part", F.col("score").alias("ks"), "n_part", "crit", "drifted")
 
 
 def psi_drift(
@@ -291,46 +368,13 @@ def psi_drift(
     noise reads as drift (KS normalizes by sqrt(n); PSI has no sample-size
     correction by construction).
 
-    One corpus reduction (groupBy part×bucket), checkpointed once; all PSI
-    math runs on the tiny (n_parts × n_buckets) aggregate. Fully
-    SQL-expressible — the entry-query oracle mirrors it in DuckDB.
-    Returns (part, psi, n_part, drifted).
+    A view of _drift_scores; fully SQL-expressible — the entry-query
+    oracle mirrors it in DuckDB. Returns (part, psi, n_part, drifted).
     """
-    val = (F.col(value) if isinstance(value, str) else value).cast("double")
-    base = docs.select("part", val.alias("x")).where(F.col("x").isNotNull())
-    bucket = _log_bucket(F.col("x"), per_octave)
-    counts = base.select("part", bucket.alias("b")).groupBy("part", "b").agg(
-        F.count("*").alias("c")
-    )
-    counts = (materialize or (lambda d: d.localCheckpoint(eager=True)))(counts)
-    parts = counts.groupBy("part").agg(F.sum("c").alias("n_part"))
-    buckets = counts.select("b").distinct()
-    dense = (
-        parts.crossJoin(buckets)
-        .join(counts, ["part", "b"], "left")
-        .fillna({"c": 0})
-        .withColumn("prop", F.col("c") / F.col("n_part"))
-    )
-    med = dense.groupBy("b").agg(F.median("prop").alias("m"))
-    med_norm = med.crossJoin(F.broadcast(med.agg(F.sum("m").alias("msum"))))
-    baseline = med_norm.select(
-        "b", (F.col("m") / F.col("msum")).alias("q")
-    )
-    g = dense.join(F.broadcast(baseline), "b")
-    p = F.greatest(F.col("prop"), F.lit(float(eps)))
-    q = F.greatest(F.col("q"), F.lit(float(eps)))
-    contrib = (p - q) * F.log(p / q)
-    out = (
-        g.withColumn("_c", contrib)
-        .groupBy("part")
-        .agg(F.sum("_c").alias("psi"), F.min("n_part").alias("n_part"))
-    )
-    return out.select(
-        "part",
-        F.round("psi", 6).alias("psi"),
-        "n_part",
-        (F.col("psi") > F.lit(float(threshold))).alias("drifted"),
-    )
+    return _drift_scores(
+        docs, None, value, ks=False, psi=True, psi_threshold=threshold,
+        psi_per_octave=per_octave, eps=eps, materialize=materialize,
+    ).select("part", F.col("score").alias("psi"), "n_part", "drifted")
 
 
 def check_drift(
@@ -344,61 +388,36 @@ def check_drift(
     psi_per_octave: int = 4,
     materialize=None,
 ) -> DataFrame:
-    """Violations (doc_id NULL, partition-scoped) for drifted partitions.
-    materialize: optional df->df hook threaded to the stat builders'
-    aggregate checkpoints (see runner.materializer). psi=True additionally
-    scores the numeric column with the Population Stability Index
-    (psi_drift — the fixed-threshold monitoring score alongside the
-    significance-tested KS; one extra reduction of the same cached column,
-    overlapped with the rest of the drift build by the runner)."""
-    spark = docs.sparkSession
-    outs = []
-
-    def v(df: DataFrame, check: str, detail) -> DataFrame:
-        return df.select(
-            F.lit(check).alias("check"),
-            F.lit(SEV_WARNING).alias("severity"),
-            F.lit(None).cast("string").alias("doc_id"),
-            F.col("part").cast("string").alias("part"),
-            detail.alias("detail"),
-        ).select(*VIOLATION_COLS)
-
-    if categorical is not None:
-        chi = chi_square_drift(
-            docs, categorical, alpha=alpha, materialize=materialize
-        ).where("drifted")
-        outs.append(
-            v(chi, CHECK_CHI2, F.format_string("chi2=%s > crit=%s (dof=%d)",
-                                               F.col("stat").cast("string"),
-                                               F.col("crit").cast("string"),
-                                               F.col("dof")))
-        )
-    if numeric is not None:
-        ks = ks_drift(docs, numeric, alpha=alpha, materialize=materialize).where(
-            "drifted"
-        )
-        outs.append(
-            v(ks, CHECK_KS, F.format_string("ks=%s > crit=%s (n=%d)",
-                                            F.col("ks").cast("string"),
-                                            F.col("crit").cast("string"),
-                                            F.col("n_part")))
-        )
-    if psi and numeric is not None:
-        ps = psi_drift(
-            docs, numeric, threshold=psi_threshold,
-            per_octave=psi_per_octave, materialize=materialize,
-        ).where("drifted")
-        outs.append(
-            v(ps, CHECK_PSI, F.format_string("psi=%s > threshold=%s (n=%d)",
-                                             F.col("psi").cast("string"),
-                                             F.lit(str(psi_threshold)),
-                                             F.col("n_part")))
-        )
-    if not outs:
+    """Violations (doc_id NULL, partition-scoped) for drifted partitions:
+    chi-square over `categorical`, KS over `numeric`, and with psi=True
+    the Population Stability Index of `numeric` too (the fixed-threshold
+    monitoring score alongside the significance-tested KS). All of them
+    come from one _drift_scores plan: one corpus reduction, checkpointed
+    through `materialize` (the df->df hook of runner.materializer)."""
+    if categorical is None and numeric is None:
         from datachecker_spark.contract import empty_violations
 
-        return empty_violations(spark)
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+        return empty_violations(docs.sparkSession)
+    s = _drift_scores(
+        docs, categorical, numeric, ks=True, psi=psi, alpha=alpha,
+        psi_threshold=psi_threshold, psi_per_octave=psi_per_octave,
+        materialize=materialize,
+    ).where("drifted")
+    check = F.col("check")
+    score, crit = F.col("score").cast("string"), F.col("crit").cast("string")
+    detail = (
+        F.when(check == CHECK_CHI2, F.format_string(
+            "chi2=%s > crit=%s (dof=%d)", score, crit, F.col("dof")))
+        .when(check == CHECK_KS, F.format_string(
+            "ks=%s > crit=%s (n=%d)", score, crit, F.col("n_part")))
+        .otherwise(F.format_string(
+            "psi=%s > threshold=%s (n=%d)", score, F.lit(str(psi_threshold)),
+            F.col("n_part")))
+    )
+    return s.select(
+        check,
+        F.lit(SEV_WARNING).alias("severity"),
+        F.lit(None).cast("string").alias("doc_id"),
+        F.col("part").cast("string").alias("part"),
+        detail.alias("detail"),
+    ).select(*VIOLATION_COLS)

@@ -293,10 +293,10 @@ def run_suite(
     # every submitted job, releases what each materialized, and re-raises.
     pool = ThreadPoolExecutor(max_workers=3)
     futs: list[Future] = []
-    # drift's internal obs/counts checkpoints are consumed entirely within
-    # this call — track them so they're released (cache.py: GC never
-    # reclaims checkpoint blocks from Python) as soon as the final drift
-    # block exists. Only the drift future's thread appends; no lock needed.
+    # drift's reduction checkpoint is consumed entirely within this call —
+    # track it so it is released (cache.py: GC never reclaims checkpoint
+    # blocks from Python) as soon as the final drift block exists. Only the
+    # drift future's thread appends; no lock needed.
     drift_intermediates: list[DataFrame] = []
     violations = None
     try:
@@ -368,8 +368,8 @@ def run_suite(
         # drift + profile run CONCURRENTLY with the main violations job on
         # background threads (Spark job submission is thread-safe; this is what
         # a cluster's scheduler does naturally when independent jobs are
-        # queued). Rationale, measured at 2M docs: drift's builders fire
-        # small driver-blocking jobs (their aggregate checkpoints) and the
+        # queued). Rationale, measured at 2M docs: building drift's plan
+        # fires small driver-blocking jobs (its reduction checkpoint) and the
         # profile is another; run inline they serialize
         # into a core-count-independent ~O(10s) floor per pass — the largest
         # engine-owned term in the round-2 N→4N scaling gap. Overlapped, their
@@ -377,8 +377,9 @@ def run_suite(
         # critical path never blocks on them.
         drift_fut = None
         if cfg.drift:
-            # both drift inputs are materialized derived columns — the drift
-            # aggregations read two cached int columns, never the span payloads
+            # both drift inputs are materialized derived columns — the one
+            # drift reduction reads two cached int columns, never the span
+            # payloads
             def _mat_track(d: DataFrame) -> DataFrame:
                 d = mat(d)
                 drift_intermediates.append(d)
@@ -484,8 +485,9 @@ def run_suite(
             # cheap to re-read from the sink write AND the metrics aggregation
             d = drift_fut.result()
             violations = d if violations is None else violations.unionByName(d)
-            # the final drift block is materialized — its obs/counts inputs
-            # are now pure insurance against a recomputation that can't happen
+            # the final drift block is materialized — its reduction
+            # checkpoint is now pure insurance against a recomputation that
+            # can't happen
             cache.release(*drift_intermediates)
         if integrity_fut is not None:
             iv, write_back = integrity_fut.result()

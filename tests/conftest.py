@@ -7,5 +7,6 @@ from datachecker_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=8, shuffle_partitions=8, app_name="doccheck-tests")
+    # cores: $SPARK_GRAFT_CPUS, else all of the host's (get_spark's default)
+    s = get_spark(shuffle_partitions=8, app_name="doccheck-tests")
     yield s

@@ -37,8 +37,8 @@ def test_run_suite_releases_to_zero(spark):
     res = run_suite(docs, config=SuiteConfig(referential=False, integrity=False))
     # while the caller holds the results, ONLY the result blocks are
     # resident: violations (main block + drift block inside the union),
-    # metrics, profile. The corpus persist and drift's obs/counts
-    # intermediates must already be gone — run_suite freed them itself.
+    # metrics, profile. The corpus persist and drift's reduction
+    # checkpoint must already be gone — run_suite freed them itself.
     held = _n_persistent(spark) - base
     assert held == 4, f"expected 4 result blocks resident, got {held}"
 

@@ -235,6 +235,115 @@ def test_check_drift_violations(spark):
     assert all(p == "p_shift" for _, p in got)
 
 
+def _pandas_drift(pdf, *, alpha, per_octave, threshold, eps=1e-6):
+    """Reference chi-square, KS and PSI per part in pandas: median
+    baseline, Bonferroni critical values. A null category counts toward
+    its part's total but scores no cell; KS and PSI drop null values (and
+    so parts whose values are all null). Returns {(check, part): (score,
+    crit, n_or_dof, drifted)}."""
+    import math
+    from statistics import NormalDist
+
+    import numpy as np
+
+    def bucket(x, k):
+        return np.sign(x) * np.floor(k * np.log(1 + np.abs(x)) / math.log(2))
+
+    def grid(df, key):
+        cnt = df.groupby(["part", key]).size().unstack(fill_value=0)
+        return cnt, df.groupby("part").size()
+
+    out = {}
+    # chi-square over cat
+    cnt, n_part = grid(pdf.assign(cat=pdf["cat"].fillna("<null>")), "cat")
+    cnt = cnt.drop(columns="<null>")
+    prop = cnt.div(n_part, axis=0)
+    base = prop.median() / prop.median().sum()
+    n_parts = len(n_part)
+    z = NormalDist().inv_cdf(1 - alpha / n_parts)
+    for part in cnt.index:
+        e = np.maximum(base * n_part[part], 0.5)
+        stat = float((((cnt.loc[part] - e) ** 2) / e).sum())
+        dof = cnt.shape[1] - 1
+        k = max(dof, 1)
+        crit = k * (1 - 2 / (9 * k) + z * math.sqrt(2 / (9 * k))) ** 3
+        out[("drift_chi2", part)] = (stat, crit, dof, stat > crit)
+    num = pdf[pdf["num"].notna()]
+    # KS over 16-per-octave buckets of num
+    cnt, n_part = grid(num.assign(b=bucket(num["num"], 16)), "b")
+    ecdf = cnt.sort_index(axis=1).cumsum(axis=1).div(n_part, axis=0)
+    med = ecdf.median()
+    a_eff = alpha / len(n_part)
+    for part in cnt.index:
+        ks = float((ecdf.loc[part] - med).abs().max())
+        crit = math.sqrt(-0.5 * math.log(a_eff / 2)) / math.sqrt(n_part[part])
+        out[("drift_ks", part)] = (ks, crit, int(n_part[part]), ks > crit)
+    # PSI over per_octave buckets of num
+    cnt, n_part = grid(num.assign(b=bucket(num["num"], per_octave)), "b")
+    prop = cnt.div(n_part, axis=0)
+    q = np.maximum(prop.median() / prop.median().sum(), eps)
+    for part in cnt.index:
+        p = np.maximum(prop.loc[part], eps)
+        psi = float(((p - q) * np.log(p / q)).sum())
+        out[("drift_psi", part)] = (psi, threshold, int(n_part[part]), psi > threshold)
+    return out
+
+
+def test_check_drift_matches_pandas_reference(spark):
+    """check_drift and its three views against _pandas_drift on a random
+    corpus with a null category, a part whose numeric values are all
+    null, negative values, and a PSI grid (3 per octave) that does not
+    divide the KS grid (16)."""
+    import re
+
+    import pandas as pd
+
+    rng = random.Random(23)
+    rows = []
+    for p in [f"r{i}" for i in range(8)] + ["shift", "allnull"]:
+        for i in range(rng.randrange(150, 260)):
+            w = (0.15, 0.35, 0.5) if p != "shift" else (0.15, 0.7, 0.15)
+            cat = rng.choices([None, "a", "b"], weights=w)[0]
+            num = None
+            if p != "allnull" and rng.random() > 0.1:
+                num = rng.gauss(40.0 if p == "shift" else 0.0, 25.0)
+            rows.append((p, cat, num))
+    docs = spark.createDataFrame(rows, "part string, cat string, num double")
+    pdf = pd.DataFrame(rows, columns=["part", "cat", "num"])
+    alpha, thr = 0.01, 0.2
+    ref = _pandas_drift(pdf, alpha=alpha, per_octave=3, threshold=thr)
+    assert ("drift_chi2", "allnull") in ref and ("drift_ks", "allnull") not in ref
+    assert any(r[3] for r in ref.values()) and not all(r[3] for r in ref.values())
+
+    def close(a, b):
+        return abs(a - b) <= 1e-5 * max(1.0, abs(b))
+
+    views = {
+        "drift_chi2": (chi_square_drift(docs, "cat", alpha=alpha), "stat", "dof"),
+        "drift_ks": (ks_drift(docs, "num", alpha=alpha), "ks", "n_part"),
+        "drift_psi": (psi_drift(docs, "num", threshold=thr, per_octave=3), "psi", "n_part"),
+    }
+    got = {}
+    for check, (df, score, n) in views.items():
+        for r in df.collect():
+            crit = r["crit"] if "crit" in r else thr
+            got[(check, r["part"])] = (r[score], crit, r[n], r["drifted"])
+    assert set(got) == set(ref)
+    for k, (score, crit, n, drifted) in ref.items():
+        g = got[k]
+        assert close(g[0], score) and close(g[1], crit), (k, g, ref[k])
+        assert (g[2], g[3]) == (n, drifted), (k, g, ref[k])
+
+    v = check_drift(docs, categorical="cat", numeric="num", alpha=alpha,
+                    psi=True, psi_threshold=thr, psi_per_octave=3).collect()
+    assert {(r["check"], r["part"]) for r in v} == {k for k, r in ref.items() if r[3]}
+    for r in v:
+        score, crit, n, _ = ref[(r["check"], r["part"])]
+        nums = [float(x) for x in re.findall(r"-?[0-9.]+(?:E-?[0-9]+)?", r["detail"].split("=", 1)[1])]
+        assert close(nums[0], score) and close(nums[1], crit) and nums[2] == n, r
+        assert r["severity"] == "WARNING" and r["doc_id"] is None
+
+
 def test_ref_path_length(spark):
     from datachecker_spark.constraints.predicates import check_ref_path_length
 

@@ -273,6 +273,33 @@ def test_psi_drift_in_suite(spark):
     res_off.release()
 
 
+# a repeated pass may recompile only what its first pass could not cache:
+# measured 18 at local[4] (261 at Spark's 100-entry codegen cache default)
+MAX_REPEAT_COMPILES = 50
+
+
+def _codegen_compiles(spark) -> int:
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeated_suite_pass_reuses_generated_code(spark):
+    """A second identical run_suite pass finds its generated classes in the
+    codegen cache (session.CODEGEN_CACHE_ENTRIES): it compiles at most
+    MAX_REPEAT_COMPILES sources, where a 100-entry cache, too small for
+    one pass, recompiles most of them."""
+    docs, catalog, expected = _corpus(spark)
+    cfg = SuiteConfig(timestamp_now="2024-06-01 00:00:00")
+    per_pass = []
+    for _ in range(2):
+        c0 = _codegen_compiles(spark)
+        res = run_suite(docs, media_catalog=catalog,
+                        expected_fingerprints=expected, config=cfg)
+        per_pass.append(_codegen_compiles(spark) - c0)
+        res.release(blocking=True)
+    assert per_pass[1] <= MAX_REPEAT_COMPILES, per_pass
+
+
 def test_checkpoint_modes_cluster_seam(spark, tmp_path):
     """The cluster-deploy materialization seam (SuiteConfig.checkpoint_mode):
     'reliable' (checkpoint() under a dir — blocks survive executor loss) and

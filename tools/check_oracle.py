@@ -8,9 +8,16 @@ Usage: python tools/check_oracle.py [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# gate the engine of the checkout this script sits in, in the driver and in
+# the Python workers (they inherit PYTHONPATH from the JVM's environment)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 
@@ -38,7 +45,8 @@ def main():
     import __spark_entry__ as E
     from datachecker_spark.session import get_spark
 
-    spark = get_spark(cores=8, shuffle_partitions=8, app_name="oracle-check")
+    # cores: $SPARK_GRAFT_CPUS, else all of the host's (get_spark's default)
+    spark = get_spark(shuffle_partitions=8, app_name="oracle-check")
 
     con = duckdb.connect()
     for t in TABLES:

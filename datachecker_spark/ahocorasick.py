@@ -11,7 +11,7 @@ are unicode text, not bytes), and picklable so one automaton built on the
 driver broadcasts to every executor. Two execution engines:
 
 * `contains(text)` — the automaton walk itself (early-exit). Used as the
-  semantic oracle in tests and for streaming state-carry scenarios.
+  semantic oracle in tests.
 * `regex()` — a single compiled alternation of the literal patterns. For the
   boolean contains-ANY semantics this is exactly equivalent, and
   `pandas.Series.str.contains` runs it in C across a whole Arrow batch —

@@ -1,7 +1,7 @@
 """Magic-number / content-format validation over binary payloads (§2.7-2.8).
 
 Re-expresses the reference's three checkers as whole-stage-codegen binary
-expressions over a `content: binary` column (the multimodal media table):
+expressions over the `content: binary` column of a media table:
 
 * simple prefix map — 31 extensions → exact byte prefix at offset 0
   (/root/reference/src/modules/magic_numbers.zig:14-46);

@@ -28,7 +28,10 @@ def duplicate_ids(docs: DataFrame, *, n_salts: int = 64) -> DataFrame:
 
 
 def check_unique_ids(docs: DataFrame, *, n_salts: int = 64) -> DataFrame:
-    dups = duplicate_ids(docs, n_salts=n_salts)
-    members = docs.select("doc_id", "part").join(dups, "doc_id", "inner")
+    dups = duplicate_ids(docs, n_salts=n_salts).withColumnRenamed("doc_id", "_dup_id")
+    # null-safe: repeated null ids form a group too, and `=` never matches null
+    members = docs.select("doc_id", "part").join(
+        dups, F.col("doc_id").eqNullSafe(F.col("_dup_id")), "inner"
+    )
     detail = F.format_string("doc_id occurs %d times", F.col("id_count"))
     return as_violations(members, CHECK_NAME, SEV_ERROR, detail)

@@ -75,11 +75,13 @@ def metrics_from_violations(
         part_counts = docs.groupBy("part").agg(F.count("*").alias("docs_scanned"))
     checks_df = spark.createDataFrame([(c,) for c in checks], ["check"])
     grid = part_counts.crossJoin(F.broadcast(checks_df))
-    vcounts = violations.groupBy("part", "check").agg(
-        F.count("*").alias("violation_count")
-    )
+    vcounts = violations.groupBy(
+        F.col("part").alias("_vpart"), F.col("check").alias("_vcheck")
+    ).agg(F.count("*").alias("violation_count"))
+    # null-safe on part: `=` never matches a null part's violations to its row
+    on = F.col("part").eqNullSafe(F.col("_vpart")) & (F.col("check") == F.col("_vcheck"))
     return (
-        grid.join(vcounts, ["part", "check"], "left")
+        grid.join(vcounts, on, "left")
         .withColumn("violation_count", F.coalesce("violation_count", F.lit(0)))
         .withColumn(
             "status",

@@ -1033,7 +1033,7 @@ def compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Tumbling-window event aggregation (batch analog of the streaming path)
+# Tumbling-window event aggregation
 # ---------------------------------------------------------------------------
 
 @query(
@@ -1048,9 +1048,7 @@ def compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly tumbling-window aggregation over the events table — the batch
-    form of the engine's Structured Streaming path (streaming.py uses the
-    same window + agg over readStream)."""
+    """Hourly tumbling-window aggregation over the events table."""
     ev = _read(spark, sf_dir, "events")
     return (
         ev.groupBy(

@@ -157,10 +157,46 @@ def test_png_idat_beyond_window(spark):
     assert len(got) == 1 and got[0]["severity"] == "ERROR"
 
 
-def test_real_format_blob_generator_roundtrip(spark):
-    from datachecker_spark.multimodal import generate_real_format_blobs
+def _real_format_blobs(spark, n: int = 120, *, seed: int = 43, corrupt_rate: float = 0.1):
+    """Media table carrying REAL format headers (+ ext column) for the
+    §2.7/§2.8 checks — one specimen per rotation of the complex-magic
+    format set, corrupt_rate rows get the signature byte flipped. Columns:
+    (media_ref, ext, content binary)."""
+    import random
 
-    media = generate_real_format_blobs(spark, n=120, corrupt_rate=0.1)
+    def specimen(ext: str) -> bytes:
+        clauses = COMPLEX_MAGIC.get(ext)
+        if clauses is None:
+            return SIMPLE_MAGIC[ext] + b"\x00" * 8
+        clause = clauses[0]
+        end = max(off + len(b) for off, b in clause)
+        buf = bytearray(end + 8)
+        for off, b in clause:
+            buf[off : off + len(b)] = b
+        return bytes(buf)
+
+    exts = [".png", ".pdf", ".jpg", ".gif", ".zip", ".mp4", ".tar", ".mp3",
+            ".avi", ".wav", ".tiff", ".html"]
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        ext = exts[i % len(exts)]
+        content = bytearray(specimen(ext))
+        if rng.random() < corrupt_rate:
+            # flip the deepest signature byte so every alternative fails
+            off = max(
+                (off for clause in COMPLEX_MAGIC.get(ext, [[(0, b"x")]]) for off, _ in clause),
+                default=0,
+            )
+            content[off] ^= 0xEE
+        rows.append((f"r{i}", ext, content))
+    return spark.createDataFrame(
+        rows, "media_ref string, ext string, content binary"
+    )
+
+
+def test_real_format_blob_generator_roundtrip(spark):
+    media = _real_format_blobs(spark, n=120, corrupt_rate=0.1)
     flagged = {r["doc_id"] for r in check_magic(media).collect()}
     # every flagged ref is genuinely corrupted and every corrupted ref is
     # flagged: re-derive the corrupted set from the same seeded generator

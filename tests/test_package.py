@@ -10,6 +10,8 @@ Spark distribution.
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import subprocess
 import sys
@@ -54,7 +56,7 @@ def test_zip_imports_standalone():
     code = (
         "import sys; sys.path.insert(0, %r); "
         "import datachecker_spark.runner, datachecker_spark.constraints.fused, "
-        "datachecker_spark.entry_queries_suite, datachecker_spark.streaming; "
+        "datachecker_spark.entry_queries_suite, datachecker_spark.graph; "
         "from datachecker_spark.runner import SuiteConfig; "
         "print('ZIP_IMPORT_OK', SuiteConfig().drift)" % out
     )
@@ -67,3 +69,56 @@ def test_zip_imports_standalone():
         timeout=120,
     )
     assert "ZIP_IMPORT_OK True" in r.stdout, r.stdout + r.stderr[-2000:]
+
+
+PKG = "datachecker_spark"
+
+
+def _module_file(name: str) -> str | None:
+    base = os.path.join(REPO, *name.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(path):
+            return path
+    return None
+
+
+def _engine_imports(path: str) -> set[str]:
+    """Engine modules `path` imports anywhere in its body, function-level
+    imports included; `from pkg import a, b` counts a and b when they are
+    submodules of pkg."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    found = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.level == 0 and node.module:
+            names = [node.module] + [f"{node.module}.{a.name}" for a in node.names]
+        else:
+            continue
+        found.update(n for n in names if n.split(".")[0] == PKG and _module_file(n))
+    return found
+
+
+def test_every_engine_module_is_reachable():
+    """Every engine module is imported, directly or transitively, from a
+    caller outside the tests: the driver entry, the bench, a tool or the
+    benchmark. A module only tests import is a path kept as history."""
+    roots = [os.path.join(REPO, f) for f in ("__spark_entry__.py", "bench.py")]
+    for d in ("tools", "perfbench"):
+        roots += sorted(glob.glob(os.path.join(REPO, d, "*.py")))
+    todo = [m for r in roots for m in _engine_imports(r)]
+    reached: set[str] = set()
+    while todo:
+        mod = todo.pop()
+        if mod not in reached:
+            reached.add(mod)
+            todo.extend(_engine_imports(_module_file(mod)))
+    engine = {
+        os.path.relpath(p, REPO)[: -len(".py")].replace(os.sep, ".")
+        for p in glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
+    }
+    engine = {m for m in engine if m.rsplit(".", 1)[-1] != "__init__"}
+    assert engine, "package tree unexpectedly empty"
+    orphans = sorted(engine - reached)
+    assert not orphans, f"engine modules no caller imports: {orphans}"

@@ -11,7 +11,8 @@ from datachecker_spark.constraints.stats import (
     check_large_docs,
     partition_profile,
 )
-from datachecker_spark.constraints.uniqueness import check_unique_ids
+from datachecker_spark.constraints.uniqueness import CHECK_NAME as UNIQUE_CHECK, check_unique_ids
+from datachecker_spark.contract import metrics_from_violations
 from datachecker_spark.datagen import (
     generate_documents,
     generate_expected_fingerprints,
@@ -61,6 +62,29 @@ def test_unique_ids(spark):
     got = [(r["doc_id"], r["part"]) for r in v.collect()]
     assert sorted(got) == [("dup", "p0"), ("dup", "p1")]
     assert all(r["severity"] == "ERROR" for r in v.collect())
+
+
+def test_unique_ids_null_id_group(spark):
+    """Repeated null ids are a duplicate group: each of its rows is an ERROR
+    row, like each row of a repeated non-null id."""
+    rows = [(None, [("text", f"n{i}", None, 0)], "p0") for i in range(3)]
+    rows += [("a", [("text", f"a{i}", None, 0)], "p1") for i in range(2)]
+    v = check_unique_ids(make_docs(spark, rows)).collect()
+    assert sorted((r["doc_id"] or "", r["detail"]) for r in v) == [
+        ("", "doc_id occurs 3 times")] * 3 + [("a", "doc_id occurs 2 times")] * 2
+    assert all(r["severity"] == "ERROR" for r in v)
+
+
+def test_metrics_null_part_fails(spark):
+    """A null part with a violation reads fail in the verdict table, not a
+    vacuous pass."""
+    rows = [("dup", [("text", f"v{i}", None, 0)], None) for i in range(2)]
+    rows += [("ok", [("text", "v", None, 0)], "p0")]
+    docs = make_docs(spark, rows)
+    m = metrics_from_violations(check_unique_ids(docs), docs, [UNIQUE_CHECK])
+    got = sorted((r["part"] or "", r["status"], r["violation_count"], r["docs_scanned"])
+                 for r in m.collect())
+    assert got == [("", "fail", 2, 2), ("p0", "pass", 0, 1)]
 
 
 def test_media_refs_and_dangling(spark):
